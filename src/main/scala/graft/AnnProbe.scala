@@ -59,8 +59,8 @@ object AnnProbe {
       val g = groundSample(e0)
       val planted = PipelineQueries.plantDups(g)
       val e = e0.unionByName(planted.select("vec_id", "embedding"))
-      val pairs = Dedup.semanticPairs2L(e, tau = 0.9)
-        .select("v1", "v2").localCheckpoint(true)
+      val pairs = graft.ops.Caches.localCheckpoint(
+        Dedup.semanticPairs2L(e, tau = 0.9).select("v1", "v2"))
       val truth = planted.alias("p")
         .join(g.alias("g"), col("p.src") === col("g.vec_id"))
         .select(col("g.vec_id").as("v1"), col("p.vec_id").as("v2"),
@@ -88,8 +88,9 @@ object AnnProbe {
       // count). localCheckpoint materializes one mining pass; without
       // it the three consumers ran three concurrent corpus shuffles
       // (measured: ENOSPC at 5M vectors on a 49 GB-free volume).
-      val lsh = Dedup.embeddingDupPairsLsh(e, tau = 0.9, tables = 0)
-        .select("v1", "v2").localCheckpoint(true)
+      val lsh = graft.ops.Caches.localCheckpoint(
+        Dedup.embeddingDupPairsLsh(e, tau = 0.9, tables = 0)
+          .select("v1", "v2"))
       val lshG = lsh
         .join(g.select(col("vec_id").as("v1")), Seq("v1"), "left_semi")
         .join(g.select(col("vec_id").as("v2")), Seq("v2"), "left_semi")

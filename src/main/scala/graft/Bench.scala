@@ -17,6 +17,8 @@ object Bench {
     * 12, 2.0 since round 13; stamped into every full-run bench JSON as
     * `retime_threshold` so cross-round totals stay comparable. */
   private val RetimeThreshold = 2.0
+  /** Settle pause between the two burst-retime sweeps. */
+  private val RetimeGapMs = 15000L
   /** Per-query merge of a fresh full run against the committed same-sf
     * reference profile: the reference keeps each query's MINIMUM over
     * both (sandbox contention only ever inflates a measurement, so a
@@ -42,45 +44,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // scale-adaptive shuffles: AQE starts every exchange at
-      // SPARK_GRAFT_INIT_PARTS partitions and coalesces down to its
-      // advisory size, so a fixed `cpus`-sized session no longer pins
-      // per-task shuffle volume to corpus/32 at probe scales — the
-      // documented production sizing discipline, applied through AQE
-      // instead of per-query repartitions. Defaults to `cpus` (no
-      // behavior change at the driver's sf0.1); the scale probes set
-      // it explicitly.
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        sys.env.getOrElse("SPARK_GRAFT_INIT_PARTS", cpus))
-      // generated-class cache (Janino output, keyed on source text):
-      // the default 100-entry LRU thrashes under a 250+-query sweep —
-      // measured 1173 vs 891 compilations over a 116-query subset at
-      // 100 vs 2000 entries (~24% of compiles were LRU re-compiles of
-      // code an earlier query already built, plus their lost JIT
-      // warmup). Scale-neutral: caches compiled CLASSES, never data or
-      // results; a long-lived production driver benefits identically.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "2000"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    // SPARK_GRAFT_STATE_PROVIDER=rocksdb switches streaming state to
-    // the RocksDB provider (off-heap/on-disk state, changelog
-    // checkpoints) — the documented production setting once state
-    // passes ~10M rows per executor (PLANS.md "streaming state at
-    // scale"): the default HDFSBacked provider holds every state row
-    // on the executor heap and the factor-1000 session probe (10M
-    // users) dies there with CANNOT_LOAD_STATE_STORE. Default
-    // unchanged — small-scale state fits the heap and HDFSBacked is
-    // faster there.
-    if (sys.env.get("SPARK_GRAFT_STATE_PROVIDER").contains("rocksdb"))
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.session()
 
     val t0 = System.nanoTime()
     val store = graft.model.GraftStore.forDir(spark, sfDir)
@@ -171,11 +135,8 @@ object Bench {
     val refTimes: Map[String, Double] =
       parseQueries(refPath, sfTagEarly).getOrElse(Map.empty)
 
-    // Queries that share cachePersist'd intermediates sort adjacently
-    // (q_dedup_*, q_pipeline_*); release the Dedup registry when the
-    // family prefix changes so the 160-query loop doesn't accumulate
-    // persisted frames for the whole run (Verify.scala does the same).
-    def family(n: String): String = n.split('_').take(2).mkString("_")
+    // a query's persisted intermediates are released right after it is
+    // timed, so no query is timed against a neighbor's caches
     def timeOnce(name: String, fn: (SparkSession, String) => DataFrame): Double = {
       val t = System.nanoTime()
       // noop sink, NOT count(): under count() Catalyst prunes every
@@ -191,6 +152,7 @@ object Bench {
         errors += name -> s"${e.getClass.getSimpleName}: ${e.getMessage}".take(300)
       }
       val sec = (System.nanoTime() - t) / 1e9
+      graft.ops.Caches.releaseCaches()
       // live progress on STDERR only — the driver parses stdout's
       // single JSON line; this is for humans watching a long run
       System.err.println(f"[bench] $name%-28s $sec%7.1f s")
@@ -200,11 +162,7 @@ object Bench {
       // settle pause at the mainline → stream-tail boundary: let the
       // mainline's last query fully drain before protocol noise starts
       if (i == tailStart && tailStart > 0) Thread.sleep(3000L)
-      val t = timeOnce(name, fn)
-      val lastOfFamily =
-        i + 1 >= selected.size || family(selected(i + 1)._1) != family(name)
-      if (lastOfFamily) { graft.pipeline.Dedup.releaseCaches(); graft.pipeline.Similarity.releaseCaches(); graft.ops.Caches.releaseCaches() }
-      name -> t
+      name -> timeOnce(name, fn)
     }
 
     // Burst defense: re-time (at the end — contention bursts are
@@ -222,9 +180,7 @@ object Bench {
     // single end-of-run burst cover both attempts (q_gqp_2hop escaped
     // at 4.5× its quiet time); a burst long enough to span sweep 1,
     // the pause AND sweep 2 would have inflated the whole run anyway.
-    // Within a sweep, shared dedup-family caches are released only on
-    // family change (same discipline as the first pass), so a run of
-    // same-family suspects approximates first-pass conditions. The min
+    // Every retry releases its caches like the first pass did. The min
     // is reported — measurements are never capped.
     // (no reference profile at this sf → no retimes at all: an sf1
     // rehearsal would otherwise re-time every genuinely-slow query)
@@ -248,18 +204,9 @@ object Bench {
         else Some(t)
       }
       def sweep(): Seq[Option[Double]] =
-        suspects.zipWithIndex.map { case (((name, _), i), j) =>
-          val r = retry(name, i)
-          val lastOfFamily = j + 1 >= suspects.size ||
-            family(suspects(j + 1)._1._1) != family(name)
-          if (lastOfFamily) { graft.pipeline.Dedup.releaseCaches(); graft.pipeline.Similarity.releaseCaches(); graft.ops.Caches.releaseCaches() }
-          r
-        }
+        suspects.map { case ((name, _), i) => retry(name, i) }
       val s1 = sweep()
-      // tolerant parse: a garbage env value must not throw away the
-      // whole already-measured run between the two sweeps
-      Thread.sleep(sys.env.get("SPARK_GRAFT_RETIME_GAP_MS")
-        .flatMap(v => scala.util.Try(v.toLong).toOption).getOrElse(15000L))
+      Thread.sleep(RetimeGapMs)
       val s2 = sweep()
       suspects.lazyZip(s1).lazyZip(s2).foreach { case (((name, t1), i), r1, r2) =>
         val best = (Seq(t1) ++ r1 ++ r2).min

@@ -88,8 +88,9 @@ object ConsumeQueries {
             // the chunk subtree (a pushed consumeView range scan) is
             // referenced ~5× by the final plan (gqp seed + semi base,
             // xg frontier + union, the drained count) and Catalyst
-            // inlines each reference — persist it (chunk-sized, family-
-            // boundary released) so the store scan runs once per chunk
+            // inlines each reference — persist it (chunk-sized,
+            // released at the end of the query) so the store scan runs
+            // once per chunk
             val pinned = res.copy(
               chunk = graft.ops.Caches.persist(res.chunk))
             val exp = Consume.expandChunk(store, pinned,
@@ -158,7 +159,8 @@ object ConsumeQueries {
     // prove uuid fidelity with a join back to the source
     "q_dc_sync" -> ((s, dir) => {
       val store = st(s, dir)
-      var mirror = graft.ingest.Ingest.emptyStore(s)
+      val empty = graft.ingest.Ingest.emptyStore(s)
+      var mirror = empty
       var res = Consume.consume(store, Consume.createConsumer("/supplier"))
       while (res.nextToken.isDefined) {
         // CUT LINEAGE each replay round (the streaming-ingest
@@ -169,8 +171,11 @@ object ConsumeQueries {
         // k=34 chunks (100x suppliers) on Catalyst re-analysis. In
         // production each replay batch lands in the mirror store's
         // parquet and the next reads it back — the same truncation.
-        mirror = graft.ingest.Merger.overwrite(s, mirror, res.chunk)
-          .localCheckpoint()
+        // the previous round's checkpoint is dead once this one exists
+        val prev = mirror
+        mirror = graft.ops.Caches.localCheckpoint(
+          graft.ingest.Merger.overwrite(s, mirror, res.chunk))
+        if (prev ne empty) graft.ops.Caches.release(prev)
         res = if (res.exhausted) Consume.Result(res.chunk.limit(0), None)
               else Consume.consume(store, res.nextToken.get)
       }

@@ -32,8 +32,7 @@ object IngestQueries {
     // range-sample pass re-executes its child, and here that child is
     // the search-back over the merged store — the store scan and the
     // flag-flip/union projections above the merge's last shuffle would
-    // run twice per roundtrip query (Caches discipline, family-
-    // boundary release)
+    // run twice per roundtrip query (released at the end of the query)
     graft.ops.Caches.persist(
       Search.run(st2, Search.Request(path = "/customer"))
         .select(Search.fieldN("custkey").cast("long").as("custkey"),
@@ -147,12 +146,13 @@ object IngestQueries {
   private def mergedStore(s: SparkSession, dir: String): GraftStore = {
     GraftStore.evictStopped(mergedCache)
     mergedCache.computeIfAbsent((s, dir), { _ =>
-      // no whole-store persist here: Merger.merge already persists the
-      // delta (newV) internally, and the flip join re-derives cheaply
-      // from the base store's persisted infotons — caching the full
-      // merged frame would duplicate ~1M rows of cache to save one
-      // small join per read
-      GraftStore.fromInfotons(s, merged(s, dir), Some(TableLoader.fieldTypes))
+      // no whole-store persist here: Merger.merge persists the delta
+      // (newV) internally — kept for the cache entry's lifetime — and
+      // the flip join re-derives cheaply from the base store's scans;
+      // caching the full merged frame would duplicate ~1M rows of
+      // cache to save one small join per read
+      graft.ops.Caches.sessionLifetime(GraftStore.fromInfotons(s,
+        merged(s, dir), Some(TableLoader.fieldTypes)))
     })
   }
 

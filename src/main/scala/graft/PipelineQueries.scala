@@ -46,8 +46,10 @@ object PipelineQueries {
   private def clusters(s: SparkSession, dir: String): DataFrame = {
     graft.model.GraftStore.evictStopped(ccCache)
     ccCache.computeIfAbsent((s, dir), { _ =>
-      val cc = Dedup.connectedComponents(jaccard(s, dir)
-          .select(col("d1").as("v1"), col("d2").as("v2")))
+      // sessionLifetime: the persisted clusters sit on the final round's
+      // local checkpoint, which cannot be recomputed once released
+      val cc = graft.ops.Caches.sessionLifetime(Dedup.connectedComponents(
+          jaccard(s, dir).select(col("d1").as("v1"), col("d2").as("v2"))))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       cc.count()
       cc
@@ -443,8 +445,9 @@ object PipelineQueries {
       // one mining pass, materialized: three consumers below would
       // otherwise re-run the corpus shuffle (the probe measured
       // ENOSPC from exactly that at 5M vectors)
-      val lsh = Dedup.embeddingDupPairsLsh(e, tau = 0.9, tables = 0)
-        .select("v1", "v2").localCheckpoint(true)
+      val lsh = graft.ops.Caches.localCheckpoint(
+        Dedup.embeddingDupPairsLsh(e, tau = 0.9, tables = 0)
+          .select("v1", "v2"))
       // planted truth pairs with their exact cosine — the recall
       // denominator (a plant whose true cosine lands under τ can
       // never be mined and must not count as a miss)

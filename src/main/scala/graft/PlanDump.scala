@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Dumps `.explain("formatted")` for declared queries to one file per
@@ -11,11 +10,11 @@ import java.nio.file.{Files, Paths}
   *
   * Usage: runMain graft.PlanDump <sfDir> <outDir> <tag> [nameFilter...]
   *
-  * Session config mirrors [[Bench]] exactly (same master/shuffle
-  * sizing from SPARK_GRAFT_CPUS) so the dumped plans are the plans the
-  * bench runs. NOTE queries whose builder runs eager work (streaming
-  * protocol, merges, quantizer fits) pay that work here too — the dump
-  * is plan-shaped evidence, not a timing run.
+  * Runs on [[SparkEntry.session]], the session [[Bench]] uses, so the
+  * dumped plans are the plans the bench runs. NOTE queries whose
+  * builder runs eager work (streaming protocol, merges, quantizer fits)
+  * pay that work here too — the dump is plan-shaped evidence, not a
+  * timing run.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -25,18 +24,7 @@ object PlanDump {
     val only = args.drop(3)
     def wanted(name: String): Boolean =
       only.isEmpty || only.exists(name.contains)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        sys.env.getOrElse("SPARK_GRAFT_INIT_PARTS", cpus))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "2000"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.session()
     Files.createDirectories(Paths.get(outDir))
     val mode = org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
@@ -49,8 +37,6 @@ object PlanDump {
         } catch { case e: Throwable =>
           System.err.println(s"[plandump] $name failed: ${e.getMessage}")
         }
-        graft.pipeline.Dedup.releaseCaches()
-        graft.pipeline.Similarity.releaseCaches()
         graft.ops.Caches.releaseCaches()
       }
     }

@@ -10,12 +10,7 @@ object Plans {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val out = args.lift(1).getOrElse("PLANS.md")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = SparkEntry.session()
     spark.sparkContext.setLogLevel("ERROR")
     val picks = Seq(
       "q_search_range",    // qp compile → one pushed predicate
@@ -134,6 +129,7 @@ object Plans {
       sb.append(df.queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode).take(6000))
       sb.append("\n```\n")
+      graft.ops.Caches.releaseCaches()
     }
     // q_stream_window/_session/_dedup return the FILE SINK read back
     // as a batch frame, so the declared query's batch plan is just a

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Repeat-profiler: times named queries K times each in ONE JVM
   * through the same noop sink [[Bench]] uses, printing every run — so
   * first-run (planning + codegen + JIT) cost separates from steady-
@@ -15,18 +13,7 @@ object ProfileQueries {
     val sfDir = args(0)
     val repeats = args(1).toInt
     val names = args.drop(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        sys.env.getOrElse("SPARK_GRAFT_INIT_PARTS", cpus))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "2000"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.session()
     // per-run job accounting: jobs/stages/tasks and the per-job wall
     // times tell WHERE a query's seconds go (action count vs one slow
     // stage) — the local stand-in for the Spark UI the guide §7.1 digs
@@ -92,10 +79,10 @@ object ProfileQueries {
               f"jobs=${jobs.get}%3d stages=${stages.get}%3d " +
               f"tasks=${tasks.get}%4d stagesum=$ssum%6.2f")
             println(s"[profile]   slowest stages: $slow")
+            // release after EVERY repeat: runs 2..K would otherwise
+            // time run 1's persisted intermediates as cache hits
+            graft.ops.Caches.releaseCaches()
           }
-          graft.pipeline.Dedup.releaseCaches()
-          graft.pipeline.Similarity.releaseCaches()
-          graft.ops.Caches.releaseCaches()
       }
     }
     spark.stop()

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -11,16 +10,7 @@ object Verify {
     val only = args.drop(2)
     def wanted(name: String): Boolean =
       only.isEmpty || only.exists(name.contains)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "2000"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.session()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.foreach { case (name, fn) =>
       if (wanted(name)) {
@@ -29,10 +19,10 @@ object Verify {
         catch { case e: Throwable =>
           System.err.println(s"[verify] $name failed: ${e.getMessage}")
         }
-        // the parquet write was the consuming action — drop per-query
-        // pipeline caches so 60 queries don't accumulate eviction
-        // pressure against the persisted store views
-        { graft.pipeline.Dedup.releaseCaches(); graft.pipeline.Similarity.releaseCaches(); graft.ops.Caches.releaseCaches() }
+        // the parquet write was the consuming action — drop the query's
+        // persisted intermediates so 250+ queries don't accumulate
+        // eviction pressure against the persisted store views
+        graft.ops.Caches.releaseCaches()
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

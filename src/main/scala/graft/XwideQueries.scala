@@ -55,8 +55,10 @@ object XwideQueries {
               "^^<http://www.w3.org/2001/XMLSchema#long> .",
             s"""<$p> <x://vocab#xbucket> "b${okey % 7}" .""")
         }
-      GraftStore.fromInfotons(s,
-        Ingest.ingest(s, Ingest.emptyStore(s), nt, T0))
+      // the ingest's persisted delta IS the store's data: kept for
+      // the cache entry's lifetime, not one query
+      graft.ops.Caches.sessionLifetime(GraftStore.fromInfotons(s,
+        Ingest.ingest(s, Ingest.emptyStore(s), nt, T0)))
     })
   }
 

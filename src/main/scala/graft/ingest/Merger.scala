@@ -196,8 +196,7 @@ object Merger {
     // commanded paths, ImpStream.scala:225-244)
     // the command batch feeds two consumers (path pushdown + cogroup):
     // persist so a derived command pipeline isn't computed twice
-    val cmds = commands.persist(
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val cmds = graft.ops.Caches.persist(commands)
     val cmdPaths = cmds.select(col("path").as("__cp")).distinct()
     val baseCur = infotons.where(col("system.current"))
       .join(cmdPaths, col("system.path") === col("__cp"), "left_semi")
@@ -215,11 +214,10 @@ object Merger {
     // reconciles nullability. Persisted: the batch output feeds three
     // consumers (flag rewrite, result union, parent synthesis) and is
     // delta-sized — without it the whole command+cogroup pipeline runs
-    // three times.
-    val newV = merged.toDF()
+    // three times. Both persists are read by the returned frames.
+    val newV = graft.ops.Caches.persist(merged.toDF()
       .withColumn("system", col("system")
-        .withField("uuid", uuidCol(col("system"), col("fields"))))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .withField("uuid", uuidCol(col("system"), col("fields")))))
     val all = if (baseEmpty) newV else {
       val changed = newV.select(col("system.path").as("__np")).distinct()
       val flipped = infotons
@@ -341,19 +339,23 @@ object Merger {
       // (see GraftStore.materializeInfotons)
       .repartitionByRange(col("__parent"), col("system.path"))
       .sortWithinPartitions(col("system.path"), col("system.indexTime"))
-      // sever lineage from the files about to be overwritten (Spark
-      // rejects writes whose plan still reads the destination); the
-      // checkpoint is delta-sized — affected partitions only
-      .localCheckpoint(true)
+    // sever lineage from the files about to be overwritten (Spark
+    // rejects writes whose plan still reads the destination); the
+    // checkpoint is delta-sized — affected partitions only — and dead
+    // once written
+    val ck = graft.ops.Caches.localCheckpoint(out)
     val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try out.write.mode("overwrite").partitionBy("__parent")
+    try ck.write.mode("overwrite").partitionBy("__parent")
       .parquet(s"$dir/infotons")
-    finally prev match {
-      case Some(v) =>
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None =>
-        spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
+    finally {
+      graft.ops.Caches.release(ck)
+      prev match {
+        case Some(v) =>
+          spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
+        case None =>
+          spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
+      }
     }
     affected
   }

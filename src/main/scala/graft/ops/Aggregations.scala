@@ -303,7 +303,7 @@ object Aggregations {
     * twice-referenced subtree — without the persist the fg and bg
     * store scans each ran twice per sig query (measured: 4 near-equal
     * scan stages ≈ the whole query). Term-count-sized, released at the
-    * harness family boundary. */
+    * end of the query. */
   def sigTerms(store: GraftStore, fg: DataFrame, bg: DataFrame,
                spec: SigTermsAgg): DataFrame = {
     val fgc = Caches.persist(keyed(store, fg, spec.field, "key")

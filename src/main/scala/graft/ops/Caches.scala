@@ -1,40 +1,77 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.storage.StorageLevel
 
-/** Within-query persisted-intermediates registry for the ops layer —
-  * the same discipline as [[graft.pipeline.Dedup.releaseCaches]] /
-  * Similarity: Catalyst plans are TREES, so a DataFrame referenced
-  * twice in one result plan is COMPUTED twice (exchange reuse only
-  * dedups identical shuffles, not arbitrary subtrees). Operators whose
-  * output plan embeds a small intermediate more than once (graph
-  * frontiers, consume chunks, sig-terms grouped counts) persist it
-  * here so the heavy upstream scan runs once per query instead of
-  * once per reference.
+/** The engine's one registry of persisted intermediates. Every frame an
+  * operator persists or local-checkpoints for the rest of a query is
+  * registered here, and every harness calls [[releaseCaches]] once
+  * after each query: no query runs on another's intermediates, and a
+  * long run never accumulates them.
   *
-  * Everything registered is RESULT/DELTA-sized (path sets, chunk rows,
-  * grouped term counts), never a base table — and it is persisted
-  * INSIDE the timed query, computed fresh from the parquet inputs on
-  * every invocation. Harness loops (Bench/Verify/ProfileQueries/
-  * PlanDump) release at the same family boundaries where they release
-  * the Dedup/Similarity registries, so a long run never accumulates
-  * entries across query families. */
+  * Why operators persist at all: Catalyst plans are TREES, so a
+  * DataFrame referenced twice in one result plan is COMPUTED twice
+  * (exchange reuse only dedups identical shuffles, not arbitrary
+  * subtrees). Graph frontiers, consume chunks, sig-terms counts, merge
+  * deltas and dedup indexes persist here so the heavy upstream work
+  * runs once per query; iterative operators (p+ closures, connected
+  * components) local-checkpoint each round here to cut lineage.
+  * Everything registered is result-, delta- or index-sized, never a
+  * base table. An operator that knows an intermediate is dead early
+  * frees it with [[release]]. Longer lifetimes stay outside the
+  * registry: stores a session cache builds under [[sessionLifetime]],
+  * and the raw sites CachesGuardSpec names (store views, per-corpus
+  * fixtures, a stream's snapshot chain). */
 object Caches {
   private val registered =
     new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
+  private val unregistered = ThreadLocal.withInitial[Boolean](() => false)
 
-  /** Persist a small multi-referenced intermediate (MEMORY_AND_DISK)
-    * and register it for the next family-boundary release. */
-  def persist(df: DataFrame): DataFrame = {
-    val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    registered.add(p)
+  private def register(df: DataFrame): Unit =
+    if (!unregistered.get) registered.add(df)
+
+  /** Persist a multi-referenced intermediate (MEMORY_AND_DISK) and
+    * register it for the end-of-query release. */
+  def persist[T](ds: Dataset[T]): Dataset[T] = {
+    val p = ds.persist(StorageLevel.MEMORY_AND_DISK)
+    register(p.toDF())
     p
   }
 
-  /** Unpersist every registered intermediate (non-blocking). */
+  /** Local checkpoint (lineage cut; eager materializes now) registered
+    * for the end-of-query release. */
+  def localCheckpoint(df: DataFrame, eager: Boolean = true): DataFrame = {
+    val c = df.localCheckpoint(eager)
+    register(c)
+    c
+  }
+
+  /** For a session cache's build (a store served to several queries):
+    * what `build` persists or checkpoints on this thread is not
+    * registered, so it stays for the session instead of one query. */
+  def sessionLifetime[A](build: => A): A = {
+    val outer = unregistered.get
+    unregistered.set(true)
+    try build finally unregistered.set(outer)
+  }
+
+  /** Free one intermediate now (non-blocking): the frame [[persist]]
+    * or [[localCheckpoint]] returned. A checkpoint is a [[LogicalRDD]]
+    * over its blocks' RDD, which `unpersist` alone does not reach. */
+  def release(df: Dataset[_]): Unit = {
+    df.unpersist(false)
+    df.queryExecution.logical match {
+      case r: LogicalRDD => r.rdd.unpersist(false)
+      case _ =>
+    }
+  }
+
+  /** Free every registered intermediate — once per query, after its
+    * result has been consumed. */
   def releaseCaches(): Unit = {
     var df = registered.poll()
-    while (df != null) { df.unpersist(false); df = registered.poll() }
+    while (df != null) { release(df); df = registered.poll() }
   }
 
   /** True when `df`'s physical plan contains ANY exchange (shuffle or

@@ -85,11 +85,19 @@ object Formatters {
   }
 
   /** One row per (infoton, field, value) — the statement-level view the
-    * triple formatters project from. */
+    * triple formatters project from. The nested columns are flattened
+    * BEFORE the filter and the explodes: over a limited frame (a search
+    * page, any `.limit`) nested-schema pruning otherwise rewrites the
+    * `system` extractions under the generator into an attribute the
+    * limit's child no longer produces (INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND
+    * `_extract_path`) — the same flat-helper-columns fix as
+    * [[graft.ingest.Merger.overwrite]]. */
   private def exploded(infotons: DataFrame): DataFrame =
     infotons
+      .select(col("system.protocol").as("protocol"),
+        col("system.path").as("path"), col("fields"))
       .where(col("fields").isNotNull)
-      .select(col("system.protocol").as("protocol"), col("system.path").as("path"),
+      .select(col("protocol"), col("path"),
         explode(col("fields")).as(Seq("field", "values")))
       .select(col("protocol"), col("path"), col("field"),
         explode(col("values")).as("v"))

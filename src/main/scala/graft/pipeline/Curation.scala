@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import graft.ops.Caches
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -537,10 +538,10 @@ object Curation {
                        eager: Boolean = true): DataFrame = {
     require(shards > 0, "curriculumShards needs shards > 0")
     val spark = docs.sparkSession
-    val ranged = docs.select(col(idCol), col(scoreCol))
+    // registered: with eager=false it outlives this call
+    val ranged = Caches.persist(docs.select(col(idCol), col(scoreCol))
       .repartitionByRange(col(scoreCol).desc, col(idCol).asc)
-      .withColumn("__pid", spark_partition_id())
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .withColumn("__pid", spark_partition_id()))
     try {
       // bounded collect: one (partition, count) row per partition
       val counts = ranged.groupBy("__pid").count()
@@ -569,14 +570,14 @@ object Curation {
       // write at the same point.
       // eager=false (plan inspection, callers managing their own
       // materialization): the persist stays ALIVE to keep the offsets
-      // valid — the caller owns the release.
+      // valid until the end-of-query release.
       if (eager) {
-        val pinned = out.localCheckpoint(true)
-        ranged.unpersist(false)
+        val pinned = Caches.localCheckpoint(out)
+        Caches.release(ranged)
         pinned
       } else out
     } catch {
-      case e: Throwable => ranged.unpersist(false); throw e
+      case e: Throwable => Caches.release(ranged); throw e
     }
   }
 

@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import graft.ops.Caches
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -14,27 +15,9 @@ import org.apache.spark.sql.functions._
   */
 object Dedup {
 
-  /** Persisted intermediates registry. Spark's CacheManager dedups by
-    * logical plan, so repeated calls over the SAME input share one
-    * entry — but a long-lived session feeding DISTINCT inputs (many
-    * micro-stores, 60-query Verify runs) would accumulate entries until
-    * eviction pressure degrades the store views. Callers release after
-    * the consuming action. */
-  private val registered =
-    new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
-
-  private def cachePersist(df: DataFrame): DataFrame = {
-    val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    registered.add(p)
-    p
-  }
-
-  /** Unpersist every intermediate this module registered (blocking =
-    * false: drop asynchronously, don't stall the caller). */
-  def releaseCaches(): Unit = {
-    var df = registered.poll()
-    while (df != null) { df.unpersist(false); df = registered.poll() }
-  }
+  /** Kept for callers that predate the one registry, [[Caches]]. */
+  @deprecated("use graft.ops.Caches.releaseCaches()", "0.1.0")
+  def releaseCaches(): Unit = Caches.releaseCaches()
 
   /** Ulp guard for ceil(tau * integer) prefix arithmetic — see the
     * FpEps comments at the use sites. Strictly loosening: it can only
@@ -92,7 +75,7 @@ object Dedup {
     * materialization across queries. */
   def hashedShingleIndex(docs: DataFrame, n: Int,
                          textCol: String = "text"): DataFrame =
-    cachePersist(shingleIndex(docs, n, textCol)
+    Caches.persist(shingleIndex(docs, n, textCol)
       .select(col("doc_id"), xxhash64(col("sh")).as("sh")))
 
   /** Exact n-gram Jaccard near-dup pairs (j >= tau) via PREFIX
@@ -131,7 +114,7 @@ object Dedup {
       .select("doc_id", "sh", "sz", "pos")
     // persisted: both sides of the candidate self-join — without it
     // the df-join + two windows run twice
-    val prefixC = cachePersist(prefix)
+    val prefixC = Caches.persist(prefix)
     val a = prefixC.alias("a"); val b = prefixC.alias("b")
     // PPJoin position filter: the overlap can't exceed
     // 1 + min(remaining tokens after this position on either side),
@@ -194,7 +177,7 @@ object Dedup {
     // persisted: BOTH sides of the candidate join derive from this
     // frame (same rationale as jaccardPairs' prefix persist — the
     // df-join + two windows would otherwise run twice)
-    val sized = cachePersist(idx.join(df0, "sh")
+    val sized = Caches.persist(idx.join(df0, "sh")
       .withColumn("pos", row_number().over(w))
       .withColumn("sz", count(lit(1)).over(Window.partitionBy("doc_id"))))
     // required overlap m = ceil(tau*|A|). BOTH-prefix pigeonhole (the
@@ -325,7 +308,7 @@ object Dedup {
     require(rows * bands == numHashes, "bands must divide numHashes")
     // persisted: a banding self-join would otherwise recompute (and
     // re-codegen) the whole 128-agg signature plan on both sides
-    val sig = cachePersist(minhashSignatures(docs, n, numHashes, textCol))
+    val sig = Caches.persist(minhashSignatures(docs, n, numHashes, textCol))
     val bandCols = (0 until bands).map { bnd =>
       struct(lit(bnd).as("band"),
         xxhash64((bnd * rows until (bnd + 1) * rows)
@@ -369,11 +352,11 @@ object Dedup {
                          numHashes: Int = 128, bands: Int = 32,
                          tau: Double = 0.8,
                          textCol: String = "text"): DataFrame = {
-    val batchIdx = cachePersist(
+    val batchIdx = Caches.persist(
       minhashBandIndex(batch, n, numHashes, bands, textCol))
     val l = batchIdx.alias("l")
     val r = corpusIndex.unionByName(batchIdx).alias("r")
-    val candidates = cachePersist(r.join(broadcast(l),
+    val candidates = Caches.persist(r.join(broadcast(l),
         col("l.band") === col("r.band") && col("l.bh") === col("r.bh") &&
           col("l.doc_id") =!= col("r.doc_id"))
       .select(least(col("l.doc_id"), col("r.doc_id")).as("d1"),
@@ -419,7 +402,7 @@ object Dedup {
       .select(col("doc_id"), col("simhash"), col("c.chunk"), col("c.ck"))
     // persisted: the self-join would otherwise run the 64-bit-vote
     // aggregation twice
-    val blockedC = cachePersist(blocked)
+    val blockedC = Caches.persist(blocked)
     val l = blockedC.alias("l"); val r = blockedC.alias("r")
     l.join(r, col("l.chunk") === col("r.chunk") &&
         col("l.ck") === col("r.ck") && col("l.doc_id") < col("r.doc_id"))
@@ -507,7 +490,7 @@ object Dedup {
         multiprobe = false), tables)
     // persisted: the bucket self-join would otherwise hash the corpus
     // through the plane projections twice
-    val bucketed = cachePersist(
+    val bucketed = Caches.persist(
       Similarity.lshBuckets(base, nPlanes, dim, nTables)
         .select(col("vec_id"), col("table"), col("bucket"),
           col("embedding")))
@@ -543,12 +526,14 @@ object Dedup {
       .unionByName(pairs.select(col("v2").as("src"), col("v1").as("dst")))
       .distinct()
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var labels = edges.select(col("src").as("node")).distinct()
-      .withColumn("label", col("node"))
-      .localCheckpoint(true)
+    // each round's checkpoint is released once the next is
+    // materialized; the last one is the result and stays registered
+    var ck = Caches.localCheckpoint(edges.select(col("src").as("node"))
+      .distinct().withColumn("label", col("node")))
+    var labels = ck
     var iter = 0
     var converged = false
-    while (!converged && iter < maxIter) {
+    try while (!converged && iter < maxIter) {
       val msgs = edges.join(labels, edges("dst") === labels("node"))
         .groupBy(col("src")).agg(min(col("label")).as("nmin"))
       val prop = labels.join(msgs, col("node") === col("src"), "left")
@@ -560,24 +545,26 @@ object Dedup {
       val lut = prop.select(col("node").as("ln"), col("label").as("ll"))
       // labels only decrease, so "changed" is final < old — carried as
       // a flag through the checkpoint, no second pass
-      val next = prop.join(lut, col("label") === col("ln"), "left")
-        .select(col("node"),
-          least(col("label"), coalesce(col("ll"), col("label")))
-            .as("label"),
-          (least(col("label"), coalesce(col("ll"), col("label"))) <
-            col("old")).as("chg"))
-        .localCheckpoint(false) // lazy: materialized by the count below
+      val next = Caches.localCheckpoint(
+        prop.join(lut, col("label") === col("ln"), "left")
+          .select(col("node"),
+            least(col("label"), coalesce(col("ll"), col("label")))
+              .as("label"),
+            (least(col("label"), coalesce(col("ll"), col("label"))) <
+              col("old")).as("chg")),
+        eager = false) // lazy: materialized by the count below
       // ONE action per round: counting the changed rows computes every
       // partition of the lazily-checkpointed frame, so the same job
       // that truncates lineage also answers convergence (the eager-
       // checkpoint + isEmpty-probe formulation paid two jobs per round)
       converged = next.where(col("chg")).count() == 0L
+      Caches.release(ck)
+      ck = next
       labels = next.drop("chg")
       iter += 1
-    }
+    } finally edges.unpersist(false)
     require(converged, s"connected components still changing after " +
       s"$maxIter rounds — raise maxIter (diameter-bound exceeded)")
-    edges.unpersist()
     labels.select(col("node").as("member"), col("label").as("root"))
   }
 
@@ -810,7 +797,7 @@ object Dedup {
   def semanticPairs(emb: DataFrame, tau: Double, k: Int = 10,
                     iters: Int = 2): DataFrame = {
     val assigned = Similarity.kmeans(emb, k, iters)
-    val m = cachePersist(emb.select(col("vec_id"), col("embedding"))
+    val m = Caches.persist(emb.select(col("vec_id"), col("embedding"))
       .join(assigned, Seq("vec_id")))
     val a = m.alias("a"); val b = m.alias("b")
     a.join(b, col("a.cluster") === col("b.cluster") &&
@@ -891,10 +878,10 @@ object Dedup {
     // adversarial-corpus caveat as the IVF cell methods.
     val probes = math.min(neCents.length,
       math.max(2, (neCents.length + 3) / 4))
-    val e = cachePersist(Similarity.computeParallel(
+    val e = Caches.persist(Similarity.computeParallel(
       emb.select(col("vec_id"),
         transform(col("embedding"), _.cast("double")).as("v"))))
-    val m = cachePersist(e.select(col("vec_id"), col("v"),
+    val m = Caches.persist(e.select(col("vec_id"), col("v"),
       graft.functions.VectorExprs.cellsArgmin(col("v"),
         graft.functions.VectorExprs.centroidTopNDist(col("v"), neCents,
           probes),
@@ -917,7 +904,7 @@ object Dedup {
         // miner, partitioned by cluster.
         val dim = fine.head.length
         val (kp, lt) = Similarity.autoKL(n, 512L, tau)
-        val bucketed = cachePersist(Similarity.lshBuckets(
+        val bucketed = Caches.persist(Similarity.lshBuckets(
           m.select(col("vec_id"), col("cluster"),
             col("v").as("embedding")), kp, dim, lt)
           .select("vec_id", "cluster", "table", "bucket"))

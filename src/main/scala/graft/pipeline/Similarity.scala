@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import graft.ops.Caches
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -20,24 +21,9 @@ import org.apache.spark.sql.functions._
   */
 object Similarity {
 
-  /** Session-lifetime intermediates this module persisted (the kmeans
-    * iteration corpus) — same discipline as [[Dedup.releaseCaches]]:
-    * callers (Bench family boundaries, long-lived sessions) release
-    * after the consuming action. */
-  private val registered =
-    new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
-
-  private def cachePersist(df: DataFrame): DataFrame = {
-    val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    registered.add(p)
-    p
-  }
-
-  /** Unpersist every intermediate this module registered. */
-  def releaseCaches(): Unit = {
-    var df = registered.poll()
-    while (df != null) { df.unpersist(false); df = registered.poll() }
-  }
+  /** Kept for callers that predate the one registry, [[Caches]]. */
+  @deprecated("use graft.ops.Caches.releaseCaches()", "0.1.0")
+  def releaseCaches(): Unit = Caches.releaseCaches()
 
   /** Partition a COMPUTE-DENSE frame by compute, not by input bytes.
     * Dense numeric/text corpora pack small on disk (200k embeddings ≈
@@ -720,15 +706,14 @@ object Similarity {
     val (e, cents) = kmeansLoop(emb, k, iters, literalMax)
     // Materialize the final assignment (2 narrow columns — tiny next
     // to the corpus), then drop the iteration corpus immediately:
-    // non-bench callers (tests, library use) don't drain the registry
-    // at family boundaries, and without this every kmeans call would
-    // pin a MEMORY_AND_DISK copy of its corpus for the session
-    // lifetime. The result frame itself stays registered so
-    // releaseCaches() still frees everything at a family boundary.
-    val out = cachePersist(
+    // callers that never drain the registry (tests, library use)
+    // would otherwise pin a MEMORY_AND_DISK copy of the corpus until
+    // the next release. The result frame stays registered for the
+    // end-of-query release.
+    val out = Caches.persist(
       assignFrame(e, cents, literalMax).select("vec_id", "cluster"))
     out.count()
-    e.unpersist(false)
+    Caches.release(e)
     out
   }
 
@@ -771,9 +756,8 @@ object Similarity {
       transform(col("embedding"), _.cast("double")).as("v"))
     // Assignment work is n×k×dim flops — [[computeParallel]] splits
     // it across cores even when the corpus is one parquet split.
-    // Persisted because the loop scans the corpus iters+1 times;
-    // released by [[releaseCaches]] at the bench family boundary.
-    val e = cachePersist(computeParallel(e0))
+    // Persisted because the loop scans the corpus iters+1 times.
+    val e = Caches.persist(computeParallel(e0))
     def round6(x: Double): Double =
       BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
     var cents: IndexedSeq[IndexedSeq[Double]] =
@@ -816,7 +800,7 @@ object Similarity {
       diskArtifact(ck, s"sem2l_${planKey}_${k}_$iters",
                    writeMat, readMat) {
         val (e, cents) = kmeansLoop(emb, k, iters, KmeansLiteralMax)
-        e.unpersist(false)
+        Caches.release(e)
         cents.map(_.toArray).toArray
       }.map(_.toIndexedSeq).toIndexedSeq
     })

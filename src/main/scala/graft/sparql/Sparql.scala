@@ -3,6 +3,7 @@ package graft.sparql
 import graft.ingest.Rdf
 import graft.qp.Namespaces
 import graft.model.{GraftStore, InfotonModel}
+import graft.ops.Caches
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -850,7 +851,9 @@ object Sparql {
     val tagged = edges.columns.contains("quad")
     val outCols = Seq(col("f.from").as("from"), col("e2.to").as("to")) ++
       (if (tagged) Seq(col("f.quad").as("quad")) else Nil)
-    val e = edges.localCheckpoint(true)
+    // the returned closure reads the edge and final-round checkpoints;
+    // each superseded round is released once the next one exists
+    val e = Caches.localCheckpoint(edges)
     // a bound subject seeds the walk: only paths FROM it are expanded,
     // so a single-resource closure never materializes the whole
     // graph's closure (frontier stays the reachable set)
@@ -866,10 +869,13 @@ object Sparql {
       val next = frontier.alias("f")
         .join(e.alias("e2"), cond)
         .select(outCols: _*).distinct()
-      val grown = acc.union(next).distinct().localCheckpoint(true)
+      val grown = Caches.localCheckpoint(acc.union(next).distinct())
       val m = grown.count()
-      if (m == n) done = true
-      else { acc = grown; frontier = next; n = m; depth += 1 }
+      if (m == n) { done = true; Caches.release(grown) }
+      else {
+        if (acc ne start) Caches.release(acc)
+        acc = grown; frontier = next; n = m; depth += 1
+      }
     }
     require(done || n == 0,
       s"p+ closure still growing after $maxDepth rounds — raise " +
@@ -1957,13 +1963,12 @@ object Sparql {
     * Cache lifetime: an ORDER BY query over a shuffle-free
     * join-of-scans persists its solution frame via
     * [[graft.ops.Caches.persistForSort]] (so the final sort's sample
-    * pass does not execute the pipeline twice). The entry is
-    * result-sized and unpersisted at the next
-    * [[graft.ops.Caches.releaseCaches]] — harness loops call it at
-    * family boundaries; a LIBRARY caller issuing many queries in one
-    * session should call `Caches.releaseCaches()` periodically (e.g.
-    * after consuming each result) or the MEMORY_AND_DISK entries
-    * accumulate for the session's lifetime (ADVICE r17). */
+    * pass does not execute the pipeline twice), and a `p+`/`p*` path
+    * registers its closure checkpoints. All of it is result-sized and
+    * freed by [[graft.ops.Caches.releaseCaches]], which every harness
+    * calls once per query; a LIBRARY caller issuing many queries in
+    * one session should do the same after consuming each result, or
+    * the entries accumulate for the session's lifetime. */
   def select(store: GraftStore, query: String): DataFrame = {
     val q0 = parse(query)
     require(!q0.ask, "ASK query — use Sparql.ask")

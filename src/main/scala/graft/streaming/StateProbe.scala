@@ -27,20 +27,9 @@ import org.apache.spark.sql.functions._
 object StateProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    // same opt-in as Bench: the documented production provider once
-    // state passes ~10M rows/executor (the HDFSBacked default is
-    // on-heap and fails CANNOT_LOAD_STATE_STORE at the 100M-event
-    // session probe). memoryUsedBytes then reports RocksDB's usage.
-    if (sys.env.get("SPARK_GRAFT_STATE_PROVIDER").contains("rocksdb"))
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    val spark = graft.SparkEntry.session()
+    // with SPARK_GRAFT_STATE_PROVIDER=rocksdb (read by the session)
+    // memoryUsedBytes reports RocksDB's usage
     spark.sparkContext.setLogLevel("ERROR")
 
     def measure(src: DataFrame, flushes: Seq[DataFrame])

@@ -581,6 +581,29 @@ class EngineSpec extends AnyFunSuite {
       inf.get(0).get("system").get("path").asText().startsWith("/doc/"))
   }
 
+  test("statement formatters over a limited search page match a point read") {
+    val store = GraftStore.forDir(spark, Sf)
+    val page = Search.search(store, Search.Request(path = "/customer",
+      sortBy = Some("-acctbal")), offset = 20, length = 10)
+    val paths = page.select("system.path").collect().map(_.getString(0))
+    assert(paths.length == 10)
+    val read = Search.read(store, paths.toSeq)
+    def lines(df: DataFrame): Set[String] =
+      df.collect().map(_.getString(0)).toSet
+    for ((name, fmt) <- Seq[(String, DataFrame => DataFrame)](
+        "ntriples" -> (Formatters.ntriples(_)),
+        "trig" -> (Formatters.trig(_)),
+        "trix" -> (Formatters.trix(_)))) {
+      val want = lines(fmt(read))
+      assert(want.nonEmpty, name)
+      assert(lines(fmt(page)) == want, s"$name over the sorted page")
+      // an unsorted limit trips the same nested-pruning path
+      val limited = lines(fmt(Search.run(store,
+        Search.Request(path = "/customer")).limit(10)))
+      assert(limited.size >= 10, s"$name over .limit(10)")
+    }
+  }
+
   test("sort-by system.score is the relevance no-op, path tie-break rules") {
     val store = GraftStore.forDir(spark, Sf)
     val scored = Search.search(store, Search.Request(path = "/nation",
@@ -3050,17 +3073,17 @@ class EngineSpec extends AnyFunSuite {
     import graft.pipeline.{Curation, TextAnalysis}
     val d = spark.read.parquet(s"$Sf/documents.parquet")
     val spread = d.repartition(spark.sparkContext.defaultParallelism)
-    def exchanges(df: org.apache.spark.sql.DataFrame): Int =
-      "Exchange".r
-        .findAllIn(df.queryExecution.executedPlan.toString).length
+    def plan(df: org.apache.spark.sql.DataFrame): String =
+      df.queryExecution.executedPlan.toString
+    def exchanges(plan: String): Int = "Exchange".r.findAllIn(plan).length
     for ((name, op) <- Seq[(String,
         org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)](
         "normalizeText" -> (Curation.normalizeText(_)),
         "scriptProfile" -> (TextAnalysis.scriptProfile(_)),
         "redactCards" -> (Curation.redactCards(_)))) {
       // single-split scan: at most the one deliberate roundrobin spread
-      val scanPlan = op(d).queryExecution.executedPlan.toString
-      val scanEx = exchanges(op(d))
+      val scanPlan = plan(op(d))
+      val scanEx = exchanges(scanPlan)
       assert(scanEx <= 1, s"$name shuffles beyond the spread: " +
         s"${scanPlan.take(600)}")
       if (scanEx == 1)
@@ -3068,9 +3091,10 @@ class EngineSpec extends AnyFunSuite {
           s"$name: the single exchange is not the compute spread: " +
             s"${scanPlan.take(600)}")
       // already-spread input: the operator itself adds NOTHING
-      assert(exchanges(op(spread)) == exchanges(spread),
+      val spreadPlan = plan(op(spread))
+      assert(exchanges(spreadPlan) == exchanges(plan(spread)),
         s"$name adds an exchange to a spread input: " +
-          s"${op(spread).queryExecution.executedPlan.toString.take(600)}")
+          s"${spreadPlan.take(600)}")
     }
   }
 

@@ -4,13 +4,100 @@ import graft.SparkSuite
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Plan-shape helpers that gate the spread-repartition probes and the
-  * persist-before-sort rule. The gates exist because `df.rdd` under
-  * AQE materializes every query stage of an exchange-bearing plan —
-  * these tests pin (a) the shape classification itself and (b) that
-  * classifying a plan launches no Spark jobs. */
+/** The persisted-intermediates registry and the plan-shape helpers
+  * that gate the spread-repartition probes and the persist-before-sort
+  * rule. The registry tests pin that one [[Caches.releaseCaches]] call
+  * frees everything an operator persisted or checkpointed; the gates
+  * exist because `df.rdd` under AQE materializes every query stage of
+  * an exchange-bearing plan — these tests pin (a) the shape
+  * classification itself and (b) that classifying a plan launches no
+  * Spark jobs. */
 class CachesSpec extends AnyFunSuite {
   private lazy val s = SparkSuite.session
+  private val Sf = "/root/testdata/sf0.001"
+
+  /** Runs `op`, then ONE registry release, and returns the persisted
+    * RDDs that were not there before `op` — the leak set. */
+  private def leakedBy(op: => Any): Set[Int] = {
+    val before = s.sparkContext.getPersistentRDDs.keySet
+    val keep = op
+    Caches.releaseCaches()
+    val left = s.sparkContext.getPersistentRDDs.keySet -- before
+    // held to here: GC'd frames would drop out of the persisted set on
+    // their own and hide a leak
+    java.lang.ref.Reference.reachabilityFence(keep)
+    left.toSet
+  }
+
+  test("registry: mergePruned leaves no persisted RDD after one release") {
+    import graft.ingest.Merger
+    import graft.ingest.Merger.{Command, FieldValue}
+    import s.implicits._
+    val store = graft.model.GraftStore.forDir(s, Sf)
+    val dir = java.nio.file.Files
+      .createTempDirectory("caches_spec_merge").toString
+    try {
+      graft.model.GraftStore.cloneInfotons(store.materializedDir.get, dir)
+      val cmds = Seq(Command("update", "/customer/1",
+        java.sql.Timestamp.valueOf("2024-07-01 00:00:00"),
+        fields = Map("acctbal" ->
+          Seq(FieldValue("1.0", Some(1.0), None, None, "d", None, None))),
+        deleteFields = Map("acctbal" -> Seq.empty))).toDS()
+      val left = leakedBy(Merger.mergePruned(s, dir, cmds))
+      assert(left.isEmpty, s"persisted RDDs left after release: $left")
+    } finally graft.model.GraftStore.rmTree(new java.io.File(dir))
+  }
+
+  test("registry: a SPARQL p+ select leaves no checkpoint after one release") {
+    import s.implicits._
+    val store = graft.model.GraftStore.fromInfotons(s,
+      graft.ingest.Ingest.ingest(s, graft.ingest.Ingest.emptyStore(s),
+        Seq("<c://n/a> <c://o#next> <c://n/b> .",
+          "<c://n/b> <c://o#next> <c://n/c> .",
+          "<c://n/c> <c://o#next> <c://n/d> .").toDS(),
+        java.sql.Timestamp.valueOf("2024-01-01 00:00:00")))
+    store.quads.count() // the store's own view is not the op's
+    Caches.releaseCaches()
+    val left = leakedBy {
+      val r = graft.sparql.Sparql.select(store,
+        "SELECT ?o WHERE { <c://n/a> <c://o#next>+ ?o } ORDER BY ?o")
+      assert(r.collect().map(_.getString(0)).toSeq ==
+        Seq("/n/b", "/n/c", "/n/d"))
+      r
+    }
+    assert(left.isEmpty, s"persisted RDDs left after release: $left")
+  }
+
+  test("registry: Dedup intermediates are freed by the one release") {
+    val docs = s.read.parquet(s"$Sf/documents.parquet")
+    val left = leakedBy {
+      val r = graft.pipeline.Dedup.minhashLsh(docs, 2, 32, 8, 0.8)
+      r.count()
+      r
+    }
+    assert(left.isEmpty, s"persisted RDDs left after release: $left")
+  }
+
+  test("release frees a local checkpoint's blocks") {
+    import s.implicits._
+    val before = s.sparkContext.getPersistentRDDs.keySet
+    val c = Caches.localCheckpoint((1 to 100).toDF("x").where(col("x") > 5))
+    assert(c.count() == 95)
+    assert((s.sparkContext.getPersistentRDDs.keySet -- before).nonEmpty)
+    Caches.release(c)
+    assert((s.sparkContext.getPersistentRDDs.keySet -- before).isEmpty)
+    Caches.releaseCaches() // a second release of the same frame is a no-op
+  }
+
+  test("sessionLifetime: what a session cache builds outlives the release") {
+    import s.implicits._
+    val kept = Caches.sessionLifetime(Caches.persist((1 to 10).toDF("x")))
+    assert(kept.count() == 10)
+    Caches.releaseCaches()
+    assert(kept.storageLevel.useMemory)
+    Caches.release(kept)
+    assert(!kept.storageLevel.useMemory)
+  }
 
   private def countJobs(body: => Unit): Int = {
     val jobs = new java.util.concurrent.atomic.AtomicInteger
