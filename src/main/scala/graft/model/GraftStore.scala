@@ -110,38 +110,21 @@ final class GraftStore(val spark: SparkSession, val infotons: DataFrame,
 
   def vTypeOf(field: String): Option[String] = fieldTypes.get(field)
 
-  /** (from, to) reference-edge pairs for a predicate set — the shared
-    * raw material of graph traversal (xg/yg/gqp hops) and SPARQL path
-    * scans. The quads layout partitions by predicate, so the isin
-    * prunes like an equality. NOT distinct (Graph joins tolerate
-    * multi-edges; closure callers add their own distinct). */
+  /** Reference edges over a predicate set — the one edge view that
+    * xg/yg/gqp, Gremlin and SPARQL paths hop over
+    * ([[graft.ops.Graph.hop]]): `from`, `label` (the predicate, as in
+    * reference JenaEdge.getLabel), `to`, `quad` (graph tag); column
+    * pruning drops what a caller does not select. The quads layout
+    * partitions by predicate, so the isin prunes like an equality;
+    * unknown predicates match no edges. NOT distinct (Graph joins
+    * tolerate multi-edges; closure callers add their own distinct). */
   def refEdges(predLocals: Seq[String]): DataFrame =
     quads.where(col("current") &&
         col("kind") =!= InfotonModel.KindDeleted &&
         col("predicate").isin(predLocals: _*) &&
         col("vType") === InfotonModel.TRef)
-      .select(col("subject").as("from"), col("s").as("to"))
-
-  /** [[refEdges]] keeping the predicate as the edge LABEL — the
-    * Blueprints edge view (Gremlin outE/inE/bothE pipes; reference
-    * JenaEdge.getLabel = predicate URI). Same pruned scan. */
-  def refEdgesLabeled(predLocals: Seq[String]): DataFrame =
-    quads.where(col("current") &&
-        col("kind") =!= InfotonModel.KindDeleted &&
-        col("predicate").isin(predLocals: _*) &&
-        col("vType") === InfotonModel.TRef)
       .select(col("subject").as("from"), col("predicate").as("label"),
-        col("s").as("to"))
-
-  /** [[refEdges]] keeping the graph tag — per-named-graph closures
-    * (`GRAPH ?g` + property paths) walk edges within one graph, so the
-    * tag rides the frontier as a join key. */
-  def refEdgesTagged(predLocals: Seq[String]): DataFrame =
-    quads.where(col("current") &&
-        col("kind") =!= InfotonModel.KindDeleted &&
-        col("predicate").isin(predLocals: _*) &&
-        col("vType") === InfotonModel.TRef)
-      .select(col("subject").as("from"), col("s").as("to"), col("quad"))
+        col("s").as("to"), col("quad"))
 }
 
 object GraftStore {

@@ -28,15 +28,20 @@ import scala.collection.mutable.ArrayBuffer
   * and `$` (namespace-qualified keys, fieldRegex Parsers.scala:57) —
   * level separation is `>`, never `.`.
   *
-  * Spark shape: every traversal LEVEL is ONE equi-join per distinct
-  * (direction, filter) group — a comma field list or wildcard level
-  * shares a single predicate-pruned quads scan (`isin` over the field
-  * set) instead of a union of per-field joins:
+  * Spark shape: every frontier step — an xg/yg/gqp level here, a
+  * Gremlin vertex or edge pipe, a SPARQL `p+` round — is ONE [[hop]],
+  * an equi-join of the frontier to the [[GraftStore.refEdges]] view.
+  * A LEVEL costs one hop per distinct (direction, filter) group — a
+  * comma field list or wildcard level shares a single predicate-pruned
+  * quads scan (`isin` over the field set) instead of a union of
+  * per-field joins:
   *   outgoing (`>f` / xg): frontier's reference values joined to
   *     infoton paths (the reference re-issues point lookups per uuid;
   *     here it's a single distributed hash join);
-  *   incoming (`<f`): a reversed equi-join through the quads view
+  *   incoming (`<f`): the reversed equi-join through the same view
   *     (find subjects whose field value IS a frontier path).
+  * xg is the single-path case of yg (one level loop); gqp runs the
+  * same level step with the origin carried.
   * `|` alternatives each expand from the ORIGINAL base (the reference
   * seeds every path with `infotons`, wsutil/package.scala:905-913) and
   * the reached sets union. Frontiers shrink fast in practice; AQE turns
@@ -50,6 +55,40 @@ import scala.collection.mutable.ArrayBuffer
   * reference default and get the same abort semantics.
   */
 object Graph {
+
+  /** Direction of a [[hop]] over the reference-edge view. */
+  private[graft] sealed trait Dir
+  private[graft] case object Out extends Dir
+  private[graft] case object In extends Dir
+  private[graft] case object Both extends Dir
+
+  /** The frontier ⋈ edge step of xg/yg/gqp, Gremlin and SPARQL paths:
+    * joins each `frontier` row to the `edges` whose near end (`from`
+    * for [[Out]], `to` for [[In]]) is its `p` and whose `scope`
+    * columns (extra join keys: a closure inside `GRAPH ?g`) equal its
+    * own. Returns the frontier's columns with `p` moved to the far
+    * end, then the edge's non-scope columns; not distinct — callers
+    * select and combine (distinct, per-head sums). [[Both]] joins the
+    * frontier twice and Catalyst inlines it per reference, so it is
+    * persisted ([[Caches]], frontier sized) to compute once. */
+  private[graft] def hop(frontier: DataFrame, edges: DataFrame, dir: Dir,
+                         scope: Seq[String] = Nil): DataFrame = {
+    val fr = (if (dir == Both) Caches.persist(frontier) else frontier).alias("fr")
+    val e = edges.alias("e")
+    def along(near: String, far: String): DataFrame = {
+      val on = scope.foldLeft(col(s"e.$near") === col("fr.p")) { (c, k) =>
+        c && col(s"e.$k") === col(s"fr.$k")
+      }
+      e.join(fr, on).select(frontier.columns.map { c =>
+        if (c == "p") col(s"e.$far").as("p") else col(s"fr.$c").as(c)
+      } ++ edges.columns.filterNot(scope.contains).map(c => col(s"e.$c")): _*)
+    }
+    dir match {
+      case Out => along("from", "to")
+      case In => along("to", "from")
+      case Both => along("from", "to").unionByName(along("to", "from"))
+    }
+  }
 
   /** One traversal hop: direction, reference field, optional qp filter
     * on the hop's targets (yg per-level filters, Parsers.scala:467-509). */
@@ -243,12 +282,6 @@ object Graph {
           s"expansion exceeded limit $l (webservice.xg.limit semantics)")
     }
 
-  /** Edge view over a SET of reference fields — one predicate-pruned
-    * scan (shared scan: [[GraftStore.refEdges]]); unknown fields match
-    * no edges, like the reference's schemaless field resolution. */
-  private def edgesMulti(store: GraftStore, fields: Seq[String]): DataFrame =
-    store.refEdges(fields)
-
   /** `$nsUri(#|/|;)*$` — the uriPattern ns-wildcard spelling
     * (Parsers.scala:362-364): a `$`-delimited namespace URI whose last
     * path segment is `*` after a `#`/`/`/`;` separator. */
@@ -289,95 +322,52 @@ object Graph {
       } else Seq(Hop(h.incoming, graft.qp.Namespaces.resolve(f), h.filter))
     }
 
-  /** Restrict target paths (col `p`) to infotons matching a qp filter.
-    * Flat helper column: a semi join keyed on a nested extraction over
-    * self-derived union lineage trips Catalyst's nested-column pruning
-    * (INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND). */
-  private def filterTargets(store: GraftStore, targets: DataFrame,
-                            qp: String): DataFrame = {
-    val pred = new FilterCompiler(store).compile(QpParser.parse(qp))
-    store.current.where(pred)
-      .select(col("system.path").as("fp"))
-      .join(targets.distinct(), col("fp") === col("p"), "left_semi")
-      .select(col("fp").as("p"))
-  }
-
-  /** Paths reachable from `frontierPaths` (col `p`) over one LEVEL —
-    * hops grouped by (direction, filter) so a comma list / wildcard
-    * level costs one join per group, not per field. */
-  private def levelTargets(store: GraftStore, frontierPaths: DataFrame,
-                           hops: Level): DataFrame = {
-    val fr = frontierPaths.alias("fr")
-    val expanded = expandNsWildcards(hops)
-    if (expanded.isEmpty) return frontierPaths.where(lit(false))
-    expanded.groupBy(h => (h.incoming, h.filter)).map {
-      case ((incoming, fOpt), hs) =>
-        val e = edgesMulti(store, hs.map(_.field)).alias("e")
-        val next =
-          if (incoming) // reversed equi-join: edge target == frontier path
-            e.join(fr, col("e.to") === col("fr.p")).select(col("e.from").as("p"))
-          else          // forward: frontier's ref values are target paths
-            e.join(fr, col("e.from") === col("fr.p")).select(col("e.to").as("p"))
-        fOpt.fold(next.distinct())(filterTargets(store, next, _))
-    }.reduce(_ union _).distinct()
-  }
-
   private def paths(df: DataFrame): DataFrame =
     df.select(col("system.path").as("p")).distinct()
 
   /** xg — expand N levels outgoing from a search result; returns the
     * originals plus every expanded infoton (wsutil/package.scala:
-    * 716-749). Each level may fan out over several fields. */
+    * 716-749). Each level may fan out over several fields. The
+    * single-path case of [[yg]]. */
   def xg(store: GraftStore, base: DataFrame, levels: Seq[Level],
-         limit: Option[Int] = None): DataFrame = {
-    // the frontier path-set is referenced TWICE per level (the next
-    // level's equi-join + the reached union) and Catalyst inlines the
-    // subtree at each reference — persist it ([[Caches]], path-set
-    // sized) so the base scan / each level's edge join runs once, not
-    // once per reference; the last level's targets feed only the
-    // union, so they stay unpersisted
-    var frontier = Caches.persist(paths(base))
-    var reached = frontier
-    levels.zipWithIndex.foreach { case (hops, i) =>
-      val next0 = levelTargets(store, frontier, hops)
-      checkLimit(next0, limit)
-      val next =
-        if (i < levels.size - 1) Caches.persist(next0) else next0
-      frontier = next
-      // no per-level distinct on `reached`: the final left-semi join
-      // ([[semiByPath]]) never duplicates store rows, so accumulated
-      // duplicates are harmless — dropping the distinct removes one
-      // Exchange per level (guide §2.4); the FRONTIER stays deduped
-      // inside levelTargets, which is what bounds fan-out growth
-      reached = reached.union(next)
-    }
-    semiByPath(store, reached)
-  }
+         limit: Option[Int] = None): DataFrame =
+    expand(store, base, Seq(levels), limit)
 
   /** yg — chained path expansion (both directions, per-hop filters,
     * `|`-separated alternatives each seeded from the ORIGINAL base);
     * returns originals plus every infoton on a satisfied path
     * (wsutil/package.scala:850-919). */
   def yg(store: GraftStore, base: DataFrame, expr: String,
-         limit: Option[Int] = None): DataFrame = {
-    // persisted for the same multi-reference reason as [[xg]]: the
-    // base path-set seeds EVERY `|` alternative plus the reached
+         limit: Option[Int] = None): DataFrame =
+    expand(store, base, parsePaths(expr), limit)
+
+  /** The xg/yg level loop: every alternative path expands level by
+    * level from the base path-set; the result is the base plus every
+    * level's targets. */
+  private def expand(store: GraftStore, base: DataFrame, alts: Seq[Path],
+                     limit: Option[Int]): DataFrame = {
+    // the base path-set seeds EVERY alternative plus the reached
     // union, and each mid-path level feeds both the next hop and the
-    // union — unpersisted, the (often heavy) base search scan re-ran
-    // once per reference (measured 3× on a filtered /lineitem base)
+    // union; Catalyst inlines the subtree at each reference — persist
+    // them ([[Caches]], path-set sized) so the (often heavy) base
+    // search scan and each level's edge join run once, not once per
+    // reference (measured 3× on a filtered /lineitem base); the last
+    // level's targets feed only the union, so they stay unpersisted
     val basePaths = Caches.persist(paths(base))
     var reached = basePaths
-    parsePaths(expr).foreach { path =>
+    alts.foreach { path =>
       var frontier = basePaths
       path.zipWithIndex.foreach { case (level, i) =>
-        val next0 = levelTargets(store, frontier, level)
+        val next0 = levelChain(store, frontier, level)
         checkLimit(next0, limit)
         val next =
           if (i < path.size - 1) Caches.persist(next0) else next0
         frontier = next
-        // same rationale as xg: the final semi join tolerates
-        // duplicates, so the per-level distinct was a pure extra
-        // Exchange per hop (several per yg with alternatives)
+        // no per-level distinct on `reached`: the final left-semi join
+        // ([[semiByPath]]) never duplicates store rows, so accumulated
+        // duplicates are harmless — dropping the distinct removes one
+        // Exchange per level (guide §2.4); the FRONTIER stays deduped
+        // inside levelChain, which is what bounds fan-out growth
         reached = reached.union(next)
       }
     }
@@ -407,24 +397,23 @@ object Graph {
       .drop("__path")
   }
 
-  /** One gqp level: expand `chain` (origin, p) over the level's hops —
-    * grouped by (direction, filter) like [[levelTargets]], origin rides
-    * the join. */
+  /** One level: expand `chain` (col `p` plus carried columns — gqp's
+    * `origin`) over the level's hops, grouped by (direction, filter)
+    * so a comma list / wildcard level costs one [[hop]] per group, not
+    * per field; a filter keeps the targets matching its qp. */
   private def levelChain(store: GraftStore, chain: DataFrame,
                          hops: Level): DataFrame = {
-    val ch = chain.alias("ch")
     val expanded = expandNsWildcards(hops)
     if (expanded.isEmpty) return chain.where(lit(false))
     expanded.groupBy(h => (h.incoming, h.filter)).map {
       case ((incoming, fOpt), hs) =>
-        val e = edgesMulti(store, hs.map(_.field)).alias("e")
-        val nextAll =
-          if (incoming)
-            e.join(ch, col("e.to") === col("ch.p"))
-              .select(col("ch.origin").as("origin"), col("e.from").as("p"))
-          else
-            e.join(ch, col("e.from") === col("ch.p"))
-              .select(col("ch.origin").as("origin"), col("e.to").as("p"))
+        val nextAll = hop(chain, store.refEdges(hs.map(_.field)),
+            if (incoming) In else Out)
+          .select(chain.columns.map(col): _*)
+        // targets LEFT SEMI matching paths: the semi shape that keeps
+        // carried columns. Flat `fp` key: a semi join on the nested
+        // `system.path` over union lineage trips Catalyst's
+        // nested-column pruning (INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND)
         fOpt.fold(nextAll.distinct()) { f =>
           val pred = new FilterCompiler(store).compile(QpParser.parse(f))
           nextAll.join(store.current.where(pred)

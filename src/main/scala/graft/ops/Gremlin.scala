@@ -1,8 +1,9 @@
 package graft.ops
 
 import graft.model.GraftStore
+import graft.ops.Graph.{Both, Dir, In, Out}
 import graft.qp.{FilterCompiler, Namespaces, QpParser}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Minimal Gremlin pipe layer over the quads view — the `_sp`
@@ -13,10 +14,10 @@ import org.apache.spark.sql.functions._
   * GremlinParser.scala:29-99, cmwell/blueprints/jena/JenaGraph.scala);
   * per-vertex object traversal like that serializes on the driver.
   * Spark-first re-expression: each pipe step compiles onto the store's
-  * edge/property views as ONE equi-join or semi-join — the same plan
-  * shapes as xg/yg hops (frontier joins; AQE broadcasts the shrinking
-  * frontier side at runtime), so a pipe over 100 TB is a short join
-  * chain, not a driver loop.
+  * edge/property views as ONE equi-join or semi-join — vertex and edge
+  * pipes are the xg/yg frontier step itself, [[Graph.hop]] (AQE
+  * broadcasts the shrinking frontier side at runtime), so a pipe over
+  * 100 TB is a short join chain, not a driver loop.
   *
   * Supported pipes — the chains the reference surface exercises:
   * {{{
@@ -34,7 +35,9 @@ import org.apache.spark.sql.functions._
   *                           eq/neq (the Blueprints T.* comparators,
   *                           quoted; routed to qp > >> < << ::; neq =
   *                           property exists AND no value equals v)
-  *   .hasNot("prop")         absence filter
+  *   .hasNot("prop")         absence filter: every vertex without
+  *                           the property, including a hop target
+  *                           that has no infoton (no properties)
   *   .dedup()                distinct frontier (hops already dedup;
   *                           kept for chain compatibility)
   *   .limit(n)               first n vertices in id order (Gremlin's
@@ -142,11 +145,6 @@ import org.apache.spark.sql.functions._
   */
 object Gremlin {
 
-  private[ops] sealed trait Dir
-  private[ops] case object Out extends Dir
-  private[ops] case object In extends Dir
-  private[ops] case object Both extends Dir
-
   private[ops] sealed trait Step
   private[ops] final case class Start(id: Option[String]) extends Step
   private[ops] final case class Hop(dir: Dir, field: Option[String]) extends Step
@@ -161,9 +159,11 @@ object Gremlin {
   private[ops] final case class AggregateStep(bag: String) extends Step
   private[ops] final case class ExceptStep(bag: String) extends Step
   private[ops] final case class RetainStep(bag: String) extends Step
+  /** `.has` / `.hasNot`: a filter on the head vertex ([[headFilter]]). */
+  private[ops] sealed trait HeadFilter extends Step
   private[ops] final case class Has(prop: String, cmp: String,
-                                    value: Option[String]) extends Step
-  private[ops] final case class HasNot(prop: String) extends Step
+                                    value: Option[String]) extends HeadFilter
+  private[ops] final case class HasNot(prop: String) extends HeadFilter
   private[ops] final case class Values(prop: String) extends Step
   private[ops] final case class Limit(n: Int) extends Step
   private[ops] case object DedupStep extends Step
@@ -499,15 +499,7 @@ object Gremlin {
       }, "gremlin syntax error: only order-preserving pipes " +
         s"(limit/id/select/label) may follow .order in '$query'")
     }
-    var frontier: DataFrame = steps.head match {
-      case Start(Some(id)) =>
-        // existence-checked like Blueprints getVertex: a missing id is
-        // an empty pipe, not a fabricated vertex
-        store.current.where(col("system.path") === id)
-          .select(col("system.path").as("p"))
-      case Start(None) => store.current.select(col("system.path").as("p"))
-      case _ => throw new IllegalStateException("unreachable")
-    }
+    var frontier = seed(store, steps.head)
     var terminal: Option[DataFrame] = None
     // live .as carry columns (insertion-ordered): __as_<label> rides
     // every vertex hop so .back can rewind surviving rows
@@ -543,24 +535,8 @@ object Gremlin {
           requireVertexMode(field.fold("outE/inE/bothE")(f => s"outE($f)"))
           require(carries.isEmpty, "gremlin syntax error: edge pipes " +
             s"do not compose with live .as names (use .back first) in '$query'")
-          val fields = field.map(Seq(_)).getOrElse(Graph.refFields(store))
-          require(fields.nonEmpty, "edge hop over empty reference-field universe")
-          val e = store.refEdgesLabeled(fields).alias("e")
-          // .bothE references the frontier in BOTH direction joins and
-          // Catalyst inlines the subtree per reference — persist it
-          // (path-set sized, [[Caches]]) so the chain prefix computes
-          // once; single-direction pipes reference it once and skip it
-          val fr = (if (dir == Both) Caches.persist(frontier)
-                    else frontier).alias("fr")
-          def pick = Seq(col("e.from").as("from"), col("e.label").as("label"),
-            col("e.to").as("to"))
-          def outE = e.join(fr, col("e.from") === col("fr.p")).select(pick: _*)
-          def inE = e.join(fr, col("e.to") === col("fr.p")).select(pick: _*)
-          edges = Some((dir match {
-            case Out => outE
-            case In => inE
-            case Both => outE.unionByName(inE)
-          }).distinct())
+          edges = Some(Graph.hop(frontier, edgesOf(store, field), dir)
+            .select("from", "label", "to").distinct())
         case VertexOf(in) =>
           requireEdgeMode(if (in) "inV" else "outV")
           // Blueprints orientation: outV = edge source, inV = target
@@ -572,42 +548,13 @@ object Gremlin {
           terminal = Some(edges.get.select(col("label")))
         case Hop(dir, field) =>
           requireVertexMode("out/in/both")
-          val fields = field.map(Seq(_)).getOrElse(Graph.refFields(store))
-          require(fields.nonEmpty, "hop over empty reference-field universe")
-          val e = store.refEdges(fields).alias("e")
-          // same dual-reference persist as .bothE above
-          val fr = (if (dir == Both) Caches.persist(frontier)
-                    else frontier).alias("fr")
-          def pickV(head: org.apache.spark.sql.Column) =
-            head.as("p") +: carries.map(c => col(s"fr.$c"))
-          def fwd = e.join(fr, col("e.from") === col("fr.p"))
-            .select(pickV(col("e.to")): _*)
-          def rev = e.join(fr, col("e.to") === col("fr.p"))
-            .select(pickV(col("e.from")): _*)
-          frontier = (dir match {
-            case Out => fwd
-            case In => rev
-            case Both => fwd.unionByName(rev)
-          }).distinct()
-        case Has(prop, cmp, vOpt) =>
+          frontier = vertexHop(store, frontier, dir, field).distinct()
+        case f: Has =>
           requireVertexMode("has") // RDF Edge has no Props (JenaEdge)
-          // same typed dispatch as the qp operators — reuse the filter
-          // compiler instead of re-deriving slot routing; neq requires
-          // the property to EXIST with a differing value (Blueprints
-          // T.neq — a bare negation would match every property-less
-          // vertex), matching the qp MustNot convention per value
-          val pred = hasPredicate(store, prop, cmp, vOpt, query)
-          // frontier stays the LEFT side so .as carry columns survive
-          frontier = frontier.join(store.current.where(pred)
-              .select(col("system.path").as("fp")),
-            col("p") === col("fp"), "left_semi")
-        case HasNot(prop) =>
+          frontier = headFilter(store, frontier, f, query)
+        case f: HasNot =>
           requireVertexMode("hasNot")
-          val exists = new FilterCompiler(store)
-            .compile(QpParser.parse(s"$prop:"))
-          frontier = frontier.join(store.current.where(!exists)
-              .select(col("system.path").as("fp")),
-            col("p") === col("fp"), "left_semi")
+          frontier = headFilter(store, frontier, f, query)
         case Values(prop) =>
           requireVertexMode("values")
           val canonical = Namespaces.resolve(prop)
@@ -744,19 +691,7 @@ object Gremlin {
     require(steps.count(_ == PathStep) <= 1 &&
       (!steps.contains(PathStep) || steps.last == PathStep),
       s"gremlin syntax error: .path must be the single terminal in '$query'")
-    def seed(base: DataFrame): DataFrame =
-      base.select(col("system.path").as("p"),
-        array(col("system.path")).as("trail"))
-    var fr: DataFrame = steps.head match {
-      case Start(Some(id)) =>
-        seed(store.current.where(col("system.path") === id))
-      case Start(None) => seed(store.current)
-      case _ => throw new IllegalStateException("unreachable")
-    }
-    def semiOn(pred: org.apache.spark.sql.Column, joinType: String): Unit =
-      fr = fr.join(store.current.where(pred)
-          .select(col("system.path").as("fp")),
-        col("p") === col("fp"), joinType)
+    var fr = seed(store, steps.head, array(col("system.path")).as("trail"))
     // explicit terminals (.path / .id) are handled after the fold; a
     // chain ending in any other pipe gets the implicit id terminal, so
     // only strip the last step when it IS an explicit terminal
@@ -766,27 +701,10 @@ object Gremlin {
     }
     body.foreach {
       case Hop(dir, field) =>
-        val fields = field.map(Seq(_)).getOrElse(Graph.refFields(store))
-        require(fields.nonEmpty, "hop over empty reference-field universe")
-        val e = store.refEdges(fields).alias("e")
-        // same dual-reference persist as the vertex-mode .both
-        val f2 = (if (dir == Both) Caches.persist(fr) else fr).alias("fr")
-        def fwd = e.join(f2, col("e.from") === col("fr.p"))
-          .select(col("e.to").as("p"),
-            concat(col("fr.trail"), array(col("e.to"))).as("trail"))
-        def rev = e.join(f2, col("e.to") === col("fr.p"))
-          .select(col("e.from").as("p"),
-            concat(col("fr.trail"), array(col("e.from"))).as("trail"))
-        fr = (dir match {
-          case Out => fwd
-          case In => rev
-          case Both => fwd.unionByName(rev)
-        }).distinct()
-      case Has(prop, cmp, vOpt) =>
-        semiOn(hasPredicate(store, prop, cmp, vOpt, query), "left_semi")
-      case HasNot(prop) =>
-        semiOn(new FilterCompiler(store).compile(QpParser.parse(s"$prop:")),
-          "left_anti")
+        fr = vertexHop(store, fr, dir, field)
+          .withColumn("trail", concat(col("trail"), array(col("p"))))
+          .distinct()
+      case f: HeadFilter => fr = headFilter(store, fr, f, query)
       case DedupStep => fr = fr.distinct()
       case SimplePathStep =>
         // Gremlin 2 SimplePathFilterPipe: drop traversal paths that
@@ -806,6 +724,49 @@ object Gremlin {
       // a .simplePath chain without a .path terminal emits the head
       // vertex set (implicit id terminal, id-frontier dedup semantics)
       fr.select(col("p").as("id")).distinct()
+  }
+
+  /** The start vertices as a frontier `p` plus seed `carry` columns;
+    * a missing id is an empty pipe (Blueprints getVertex). */
+  private def seed(store: GraftStore, start: Step, carry: Column*): DataFrame = {
+    val base = start match {
+      case Start(Some(id)) => store.current.where(col("system.path") === id)
+      case Start(None) => store.current
+      case _ => throw new IllegalStateException("unreachable")
+    }
+    base.select(col("system.path").as("p") +: carry: _*)
+  }
+
+  /** Edges over `field`, or over every reference field (no-arg pipe). */
+  private def edgesOf(store: GraftStore, field: Option[String]): DataFrame = {
+    val fields = field.map(Seq(_)).getOrElse(Graph.refFields(store))
+    require(fields.nonEmpty, "hop over empty reference-field universe")
+    store.refEdges(fields)
+  }
+
+  /** A vertex pipe (.out/.in/.both): the frontier's columns with `p`
+    * at each edge's far end; each evaluator combines them its own way. */
+  private def vertexHop(store: GraftStore, frontier: DataFrame, dir: Dir,
+                        field: Option[String]): DataFrame =
+    Graph.hop(frontier, edgesOf(store, field), dir)
+      .select(frontier.columns.map(col): _*)
+
+  /** `.has` / `.hasNot` as a LEFT SEMI / ANTI join of the frontier
+    * (carried columns pass through) on `p` against the vertices with
+    * the property. `.out` emits refs to deleted or never-written paths
+    * as vertices; they have no properties, so `.hasNot` keeps them. */
+  private def headFilter(store: GraftStore, frontier: DataFrame,
+                         step: HeadFilter, query: String): DataFrame = {
+    val (pred, how) = step match {
+      // same typed dispatch as the qp operators — reuse the filter
+      // compiler instead of re-deriving slot routing
+      case Has(prop, cmp, vOpt) =>
+        (hasPredicate(store, prop, cmp, vOpt, query), "left_semi")
+      case HasNot(prop) =>
+        (new FilterCompiler(store).compile(QpParser.parse(s"$prop:")), "left_anti")
+    }
+    frontier.join(store.current.where(pred).select(col("system.path").as("fp")),
+      col("p") === col("fp"), how)
   }
 
   /** Shared `.has` → qp predicate compilation (Blueprints T.*
@@ -891,38 +852,12 @@ object Gremlin {
       steps.count(_ == GroupCountStep) == 1,
       s"gremlin syntax error: .groupCount must be the single terminal " +
         s"in '$query'")
-    def seed(base: DataFrame): DataFrame =
-      base.select(col("system.path").as("p"), lit(1L).as("cnt"))
-    var fr: DataFrame = steps.head match {
-      case Start(Some(id)) =>
-        seed(store.current.where(col("system.path") === id))
-      case Start(None) => seed(store.current)
-      case _ => throw new IllegalStateException("unreachable")
-    }
-    def semiOn(pred: org.apache.spark.sql.Column, joinType: String): Unit =
-      fr = fr.join(store.current.where(pred)
-          .select(col("system.path").as("fp")),
-        col("p") === col("fp"), joinType)
+    var fr = seed(store, steps.head, lit(1L).as("cnt"))
     steps.tail.init.foreach {
       case Hop(dir, field) =>
-        val fields = field.map(Seq(_)).getOrElse(Graph.refFields(store))
-        require(fields.nonEmpty, "hop over empty reference-field universe")
-        val e = store.refEdges(fields).alias("e")
-        val f2 = fr.alias("fr")
-        def fwd = e.join(f2, col("e.from") === col("fr.p"))
-          .select(col("e.to").as("p"), col("fr.cnt").as("cnt"))
-        def rev = e.join(f2, col("e.to") === col("fr.p"))
-          .select(col("e.from").as("p"), col("fr.cnt").as("cnt"))
-        fr = (dir match {
-          case Out => fwd
-          case In => rev
-          case Both => fwd.unionByName(rev)
-        }).groupBy("p").agg(sum("cnt").as("cnt"))
-      case Has(prop, cmp, vOpt) =>
-        semiOn(hasPredicate(store, prop, cmp, vOpt, query), "left_semi")
-      case HasNot(prop) =>
-        semiOn(new FilterCompiler(store).compile(QpParser.parse(s"$prop:")),
-          "left_anti")
+        fr = vertexHop(store, fr, dir, field)
+          .groupBy("p").agg(sum("cnt").as("cnt"))
+      case f: HeadFilter => fr = headFilter(store, fr, f, query)
       case DedupStep =>
         fr = fr.select(col("p")).distinct().withColumn("cnt", lit(1L))
       case Limit(n) => fr = fr.orderBy(col("p")).limit(n)

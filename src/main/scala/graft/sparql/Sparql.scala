@@ -3,7 +3,7 @@ package graft.sparql
 import graft.ingest.Rdf
 import graft.qp.Namespaces
 import graft.model.{GraftStore, InfotonModel}
-import graft.ops.Caches
+import graft.ops.{Caches, Graph}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -814,43 +814,38 @@ object Sparql {
 
   // -------------------------------------------------------------- compile
 
-  /** Transitive closure of a predicate set's edge union — `p+` and
-    * `(p1|p2)+` paths.
-    * Iterative frontier expansion with distinct-accumulate; each round
-    * is one distributed join, lineage cut per round via localCheckpoint
-    * (the standard Spark iterative-algorithm shape — same discipline as
-    * connected-components). Depth-bounded as a runaway guard; real
-    * reference graphs (FK chains) are shallow. The bound is
-    * session-configurable (`spark.graft.sparql.pathDepth`, default 12)
-    * so legitimately deeper chains have an actionable knob. */
   /** The distinct (from, to) edge union for a predicate set — the raw
-    * material of every path-modifier scan (shared scan:
-    * [[GraftStore.refEdges]]). Inverse members (`^p` inside an
-    * alternation) contribute their edges with the ends swapped. */
+    * material of every path-modifier scan ([[GraftStore.refEdges]]),
+    * plus the graph tag `quad` when `tagged`. Inverse members (`^p`
+    * inside an alternation) contribute their edges with the ends
+    * swapped. */
   private def edgeSet(store: GraftStore, fwd: Seq[String],
                       inv: Seq[String],
                       tagged: Boolean = false): DataFrame = {
-    def fwdEdges(ls: Seq[String]) =
-      if (tagged) store.refEdgesTagged(ls) else store.refEdges(ls)
-    val f = if (fwd.isEmpty) None else Some(fwdEdges(fwd))
-    val i = if (inv.isEmpty) None
-      else Some(
-        if (tagged) store.refEdgesTagged(inv)
-          .select(col("to").as("from"), col("from").as("to"), col("quad"))
-        else store.refEdges(inv)
-          .select(col("to").as("from"), col("from").as("to")))
+    val tag = if (tagged) Seq(col("quad")) else Nil
+    def edges(ls: Seq[String], from: String, to: String) =
+      store.refEdges(ls).select(col(from).as("from") +: col(to).as("to") +: tag: _*)
+    val f = if (fwd.isEmpty) None else Some(edges(fwd, "from", "to"))
+    val i = if (inv.isEmpty) None else Some(edges(inv, "to", "from"))
     (f.toSeq ++ i.toSeq).reduce(_ unionByName _).distinct()
   }
 
+  /** Transitive closure of an edge set — `p+` and `(p1|p2)+` paths.
+    * Iterative frontier expansion with distinct-accumulate; each round
+    * is one [[Graph.hop]] (a distributed join), lineage cut per round
+    * via localCheckpoint (the standard Spark iterative-algorithm shape
+    * — same discipline as connected-components). Depth-bounded as a
+    * runaway guard; real reference graphs (FK chains) are shallow. The
+    * bound is session-configurable (`spark.graft.sparql.pathDepth`,
+    * default 12) so legitimately deeper chains have an actionable
+    * knob. */
   private def transitive(store: GraftStore, edges: DataFrame,
                          seed: Option[String] = None): DataFrame = {
     val maxDepth = store.quads.sparkSession.conf
       .get("spark.graft.sparql.pathDepth", "12").toInt
-    // edges carrying a `quad` column walk PER GRAPH: the tag is an
-    // extra frontier join key, so a path never hops across graphs
-    val tagged = edges.columns.contains("quad")
-    val outCols = Seq(col("f.from").as("from"), col("e2.to").as("to")) ++
-      (if (tagged) Seq(col("f.quad").as("quad")) else Nil)
+    // edges carrying a `quad` column walk PER GRAPH: the tag is a hop
+    // scope key, so a path never hops across graphs
+    val scope = edges.columns.toSeq.filter(_ == "quad")
     // the returned closure reads the edge and final-round checkpoints;
     // each superseded round is released once the next one exists
     val e = Caches.localCheckpoint(edges)
@@ -864,11 +859,12 @@ object Sparql {
     var depth = 1
     var done = n == 0
     while (!done && depth < maxDepth) {
-      var cond = col("f.to") === col("e2.from")
-      if (tagged) cond = cond && col("f.quad") === col("e2.quad")
-      val next = frontier.alias("f")
-        .join(e.alias("e2"), cond)
-        .select(outCols: _*).distinct()
+      // a (from, to) pair walks with `to` as the hop head; `from` is
+      // carried as `start`
+      val next = Graph.hop(frontier.select(col("from").as("start") +:
+            col("to").as("p") +: scope.map(col): _*), e, Graph.Out, scope)
+        .select(col("start").as("from") +: col("p").as("to") +: scope.map(col): _*)
+        .distinct()
       val grown = Caches.localCheckpoint(acc.union(next).distinct())
       val m = grown.count()
       if (m == n) { done = true; Caches.release(grown) }

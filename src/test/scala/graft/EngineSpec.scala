@@ -3943,6 +3943,46 @@ class EngineSpec extends AnyFunSuite {
       Gremlin.eval(store, """g.v("/nation/1").id.out""") }
   }
 
+  test("xg and yg share one level loop: same rows, same expansion cap") {
+    import graft.ops.Graph
+    val store = GraftStore.forDir(spark, Sf)
+    val base = Search.run(store, Search.Request(path = "/lineitem",
+      qp = Some("quantity>49.5")))
+    val levels = Graph.parseXg("refOrders>refCustomer", Graph.refFields(store))
+    val expr = ">refOrders>refCustomer"
+    def rows(df: DataFrame) =
+      df.select("system.path").collect().map(_.getString(0)).sorted.toSeq
+    val viaXg = rows(Graph.xg(store, base, levels))
+    assert(viaXg.size > base.count() && viaXg == rows(Graph.yg(store, base, expr)))
+    // no level reaches more than the whole result: the cap is inert
+    val roomy = Some(viaXg.size)
+    assert(rows(Graph.xg(store, base, levels, limit = roomy)) == viaXg)
+    assert(rows(Graph.yg(store, base, expr, limit = roomy)) == viaXg)
+    // the first level already reaches more than one order: both abort
+    intercept[IllegalStateException] {
+      Graph.xg(store, base, levels, limit = Some(1)) }
+    intercept[IllegalStateException] {
+      Graph.yg(store, base, expr, limit = Some(1)) }
+  }
+
+  test("gremlin hasNot keeps a hop target without an infoton in every evaluator") {
+    import graft.ops.Gremlin
+    // /b/1 exists only as a ref target: .out emits it as a vertex, and
+    // that vertex has no properties at all
+    val store = storeOf(Seq(
+      "<c://a/1> <cmwell://ont#refX> <c://b/1> .",
+      "<c://a/1> <cmwell://ont#name> \"a\" ."), T("2024-01-01 00:00:00"))
+    def rows(q: String) =
+      Gremlin.eval(store, q).collect().map(_.toSeq.mkString(",")).toSet
+    val target = """g.v("/a/1").out("refX").hasNot("name")"""
+    assert(rows(s"$target.id") == Set("/b/1"))
+    assert(rows(s"$target.path") == Set("/a/1>/b/1"))
+    assert(rows(s"$target.groupCount") == Set("/b/1,1"))
+    // the start vertex carries the property: dropped by all three
+    val start = """g.v("/a/1").hasNot("name")"""
+    assert(Seq("id", "path", "groupCount").forall(t => rows(s"$start.$t").isEmpty))
+  }
+
   test("gremlin edge pipes: outE/inE/bothE, inV/outV, label, edge ids") {
     import graft.ops.Gremlin
     val store = GraftStore.forDir(spark, Sf)
