@@ -1,5 +1,8 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+
 /** Repeat-profiler: times named queries K times each in ONE JVM
   * through the same noop sink [[Bench]] uses, printing every run — so
   * first-run (planning + codegen + JIT) cost separates from steady-
@@ -60,6 +63,10 @@ object ProfileQueries {
           (1 to repeats).foreach { i =>
             jobs.set(0); stages.set(0); tasks.set(0); jobTimes.clear()
             stageTimes.clear()
+            // codegen work: Janino compiles (a cache hit compiles
+            // nothing) and their time, as deltas over the run
+            val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+            val compileNs0 = CodeGenerator.compileTime
             val t = System.nanoTime()
             try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
             catch { case e: Throwable =>
@@ -75,8 +82,12 @@ object ProfileQueries {
             val slow = st.sortBy(-_._2).take(5)
               .map(s => f"${s._2 / 1e3}%.2fs/t${s._3}:${s._4}")
               .mkString(" | ")
+            val compiles =
+              CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
+            val compileSec = (CodeGenerator.compileTime - compileNs0) / 1e9
             println(f"[profile] $name%-30s run $i%2d  $sec%7.2f s  " +
-              f"jobs=${jobs.get}%3d stages=${stages.get}%3d " +
+              f"jobs=${jobs.get}%3d compiles=$compiles%3d " +
+              f"compile_s=$compileSec%5.2f stages=${stages.get}%3d " +
               f"tasks=${tasks.get}%4d stagesum=$ssum%6.2f")
             println(s"[profile]   slowest stages: $slow")
             // release after EVERY repeat: runs 2..K would otherwise

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.functions.SlotExists
 import graft.model.{GraftStore, InfotonModel}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
@@ -64,7 +65,7 @@ object Aggregations {
     g.backgroundTerm.fold(store.current) { case (f, v) =>
       store.infotons.where(
         col("system.kind") =!= InfotonModel.KindDeleted &&
-        exists(col("fields").getItem(f), x => x.getField("s") === v))
+        SlotExists.of(col("fields").getItem(f), "s", "=", lit(v)))
     }
 
   /** Numeric view of a typed value struct: dates aggregate as epoch

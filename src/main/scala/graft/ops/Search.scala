@@ -3,7 +3,10 @@ package graft.ops
 import graft.model.{GraftStore, InfotonModel}
 import graft.qp.{FilterCompiler, QpParser}
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.InSet
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.ColumnBridge
+import org.apache.spark.unsafe.types.UTF8String
 
 /** `op=search` — the main read path (reference lifecycle SURVEY.md §3.1:
   * Application.handleSearch → FTSService.search, FTSService.scala:
@@ -115,9 +118,30 @@ object Search {
 
   /** `op=read` point read / `POST /_out` multi-get (Application.scala:
     * 2326; OutputHandler.scala:172): current versions of the exact
-    * paths — a pushed-down IN filter, the engine's point-lookup shape. */
-  def read(store: GraftStore, paths: Seq[String]): DataFrame =
-    store.current.where(col("system.path").isin(paths: _*))
+    * paths — pushed-down IN filters, the engine's point-lookup shape.
+    *
+    * One IN list per parent directory, OR-ed together, not one list
+    * over all paths: Parquet turns an IN of more than
+    * `spark.sql.parquet.pushdown.inFilterThreshold` (10) values into
+    * one min/max range, and a range from `/customer/…` to
+    * `/supplier/…` spans every directory that sorts between them
+    * (`/lineitem`'s row groups included). Per directory, each list's
+    * range stays inside its own directory's row groups.
+    *
+    * Each list is an `InSet` whatever its size. Catalyst turns only
+    * lists of more than 10 values into one, and a shorter `In`
+    * inlines its paths into the generated code, so every read would
+    * compile new code; an `InSet` carries them as a reference set. */
+  def read(store: GraftStore, paths: Seq[String]): DataFrame = {
+    val path = ColumnBridge.expression(col("system.path"))
+    val byDir = paths.distinct
+      .groupBy(p => p.substring(0, math.max(p.lastIndexOf('/'), 0)))
+      .values.toSeq.sortBy(_.head)
+    store.current.where(byDir
+      .map(ps => ColumnBridge.column(
+        InSet(path, ps.map(UTF8String.fromString).toSet[Any])))
+      .reduceOption(_ || _).getOrElse(lit(false)))
+  }
 
   /** `op=stream` / `mstream` / `sstream` (Streams.scala:278-330): the
     * full filtered result as one distributed job — Spark's partitions

@@ -1,5 +1,6 @@
 package graft.qp
 
+import graft.functions.SlotExists
 import graft.model.{GraftStore, InfotonModel}
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
@@ -10,8 +11,21 @@ import org.apache.spark.sql.functions._
   * This is the Spark analog of the reference's whole-tree compile to a
   * single ES bool query (FTSService.applyFiltersToRequest:840-933):
   * because the result is a single declarative predicate, Catalyst
-  * pushes the cheap parts into the Parquet scan and codegens the rest —
-  * no per-filter passes over the data.
+  * pushes the cheap parts into the Parquet scan and evaluates the rest
+  * in one `Filter` — no per-filter passes over the data.
+  *
+  * Generated code: system-field predicates, existence checks and plain
+  * value comparisons (`=`, `<`, `<=`, `>`, `>=` on the `n`/`t`/`s`/`b`
+  * slots, numeric and date Contains/Like as equality) stay in
+  * whole-stage codegen; value comparisons go through
+  * [[graft.functions.SlotExists]]. Analyzed Contains and fuzzy Like on
+  * strings, `_all`, `system.quad`/`system.lang` and the
+  * `system.lastModifiedBy` token ranges need per-element lambdas
+  * (`exists`), which Spark evaluates interpreted; one of them takes the
+  * whole `Filter` out of codegen. SlotExists carries its comparand as a
+  * reference object, not a literal in the generated Java: the source is
+  * the same for every value, so the next query of the same shape hits
+  * Spark's codegen cache instead of compiling again.
   *
   * Typed dispatch: the reference routes each predicate to the right
   * typed ES field via name-mangling (FTSService.scala:280-300,886-903);
@@ -90,9 +104,7 @@ final class FilterCompiler(store: GraftStore,
     value match {
       case None => // existence (FTSService.scala:909-915)
         arr.isNotNull && size(arr) > 0
-      case Some(v) =>
-        val pred: Column => Column = valuePredicate(vo, canonical, v)
-        arr.isNotNull && exists(arr, pred)
+      case Some(v) => arr.isNotNull && valueClause(arr, vo, canonical, v)
     }
   }
 
@@ -143,45 +155,37 @@ final class FilterCompiler(store: GraftStore,
   private def autoFuzz(v: String): Int =
     if (v.length < 3) 0 else if (v.length <= 5) 1 else 2
 
-  private def valuePredicate(vo: ValueOp, field: String, v: String)
-      : Column => Column = {
-    val vType = store.vTypeOf(field).getOrElse(TString)
-    vType match {
-      case TInt | TLong | TDouble | TFloat =>
-        val litv = lit(v.toDouble)
-        vo match {
-          case Equals | Contains => _.getField("n") === litv
-          case GreaterThan => _.getField("n") > litv
-          case GreaterThanOrEquals => _.getField("n") >= litv
-          case LessThan => _.getField("n") < litv
-          case LessThanOrEquals => _.getField("n") <= litv
-          case Like => _.getField("n") === litv
-        }
+  /** One value clause over a field's value array. Plain slot
+    * comparisons go through [[SlotExists]] (generated code); analyzed
+    * Contains and fuzzy Like on strings need a per-element lambda and
+    * stay on `exists`. */
+  private def valueClause(arr: Column, vo: ValueOp, field: String,
+                          v: String): Column = {
+    // numeric and date Contains/Like compare for equality
+    def cmp(slot: String, value: Column): Column = {
+      val op = vo match {
+        case Equals | Contains | Like => "="
+        case GreaterThan => ">"
+        case GreaterThanOrEquals => ">="
+        case LessThan => "<"
+        case LessThanOrEquals => "<="
+      }
+      SlotExists.of(arr, slot, op, value)
+    }
+    store.vTypeOf(field).getOrElse(TString) match {
+      case TInt | TLong | TDouble | TFloat => cmp("n", lit(v.toDouble))
       case TDate =>
         // lenient input formats (reference DateParser,
         // Parsers.scala:765-808 accepts date / datetime forms)
-        val litv = to_timestamp(lit(v.replace("T", " ").stripSuffix("Z")))
-        vo match {
-          case Equals | Contains => _.getField("t") === litv
-          case GreaterThan => _.getField("t") > litv
-          case GreaterThanOrEquals => _.getField("t") >= litv
-          case LessThan => _.getField("t") < litv
-          case LessThanOrEquals => _.getField("t") <= litv
-          case Like => _.getField("t") === litv
-        }
-      case TBool =>
-        c => c.getField("b") === lit(v.toBoolean)
+        cmp("t", to_timestamp(lit(v.replace("T", " ").stripSuffix("Z"))))
+      case TBool => SlotExists.of(arr, "b", "=", lit(v.toBoolean))
       case _ => // string / reference
         vo match {
-          case Equals => _.getField("s") === lit(v)
-          case Contains => c => containsPred(c.getField("s"), v)
-          case Like =>
-            c => levenshtein(lower(c.getField("s")), lit(v.toLowerCase)) <=
-              lit(autoFuzz(v))
-          case GreaterThan => _.getField("s") > lit(v)
-          case GreaterThanOrEquals => _.getField("s") >= lit(v)
-          case LessThan => _.getField("s") < lit(v)
-          case LessThanOrEquals => _.getField("s") <= lit(v)
+          case Contains => exists(arr, c => containsPred(c.getField("s"), v))
+          case Like => exists(arr, c =>
+            levenshtein(lower(c.getField("s")), lit(v.toLowerCase)) <=
+              lit(autoFuzz(v)))
+          case _ => cmp("s", lit(v))
         }
     }
   }

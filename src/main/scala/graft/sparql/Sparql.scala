@@ -831,53 +831,60 @@ object Sparql {
   }
 
   /** Transitive closure of an edge set — `p+` and `(p1|p2)+` paths.
-    * Iterative frontier expansion with distinct-accumulate; each round
-    * is one [[Graph.hop]] (a distributed join), lineage cut per round
-    * via localCheckpoint (the standard Spark iterative-algorithm shape
-    * — same discipline as connected-components). Depth-bounded as a
-    * runaway guard; real reference graphs (FK chains) are shallow. The
-    * bound is session-configurable (`spark.graft.sparql.pathDepth`,
-    * default 12) so legitimately deeper chains have an actionable
-    * knob. */
-  private def transitive(store: GraftStore, edges: DataFrame,
-                         seed: Option[String] = None): DataFrame = {
-    val maxDepth = store.quads.sparkSession.conf
+    * Semi-naive frontier expansion: round k hops only the pairs that
+    * round k−1 found NEW (Δ = hop(Δ) minus the closure so far), so
+    * every round plans exactly one [[Graph.hop]] join however deep the
+    * walk. The closure so far is one local checkpoint (a lineage cut)
+    * whose `round` column tags each pair with the round that found
+    * it, so Δ is a filter on it. Each round's checkpoint is lazy: the
+    * round's one `count` of new pairs both materializes it and answers
+    * convergence (no new pair) — the standard Spark iterative-algorithm
+    * shape, as in connected components — and the superseded round is
+    * released. Depth-bounded as a runaway guard; real reference graphs
+    * (FK chains) are shallow. The bound is session-configurable
+    * (`spark.graft.sparql.pathDepth`, default 12) so legitimately
+    * deeper chains have an actionable knob. `onRound` sees each
+    * round's hop output (a plan probe for tests). */
+  private[sparql] def transitive(edges: DataFrame,
+                                 seed: Option[String] = None,
+                                 onRound: DataFrame => Unit = _ => ())
+      : DataFrame = {
+    val maxDepth = edges.sparkSession.conf
       .get("spark.graft.sparql.pathDepth", "12").toInt
     // edges carrying a `quad` column walk PER GRAPH: the tag is a hop
     // scope key, so a path never hops across graphs
     val scope = edges.columns.toSeq.filter(_ == "quad")
-    // the returned closure reads the edge and final-round checkpoints;
-    // each superseded round is released once the next one exists
     val e = Caches.localCheckpoint(edges)
     // a bound subject seeds the walk: only paths FROM it are expanded,
     // so a single-resource closure never materializes the whole
     // graph's closure (frontier stays the reachable set)
     val start = seed.fold(e)(p => e.where(col("from") === p))
-    var acc = start
-    var frontier = start
-    var n = acc.count()
+    var acc = Caches.localCheckpoint(start.withColumn("round", lit(0)),
+      eager = false)
+    var done = false
     var depth = 1
-    var done = n == 0
     while (!done && depth < maxDepth) {
       // a (from, to) pair walks with `to` as the hop head; `from` is
       // carried as `start`
-      val next = Graph.hop(frontier.select(col("from").as("start") +:
-            col("to").as("p") +: scope.map(col): _*), e, Graph.Out, scope)
+      val next = Graph.hop(acc.where(col("round") === depth - 1)
+            .select(col("from").as("start") +: col("to").as("p") +:
+              scope.map(col): _*), e, Graph.Out, scope)
         .select(col("start").as("from") +: col("p").as("to") +: scope.map(col): _*)
-        .distinct()
-      val grown = Caches.localCheckpoint(acc.union(next).distinct())
-      val m = grown.count()
-      if (m == n) { done = true; Caches.release(grown) }
-      else {
-        if (acc ne start) Caches.release(acc)
-        acc = grown; frontier = next; n = m; depth += 1
-      }
+      onRound(next)
+      // EXCEPT is distinct and null-safe on the graph tag
+      val grown = Caches.localCheckpoint(acc.unionByName(
+        next.except(acc.drop("round")).withColumn("round", lit(depth))),
+        eager = false)
+      done = grown.where(col("round") === depth).count() == 0
+      Caches.release(acc)
+      acc = grown
+      if (!done) depth += 1
     }
-    require(done || n == 0,
+    require(done,
       s"p+ closure still growing after $maxDepth rounds — raise " +
         "spark.graft.sparql.pathDepth for deeper chains (silent " +
         "truncation would drop results)")
-    acc
+    acc.drop("round")
   }
 
   /** `?s p+ ?o` / `?s p* ?o` → the closure frame with pattern bindings
@@ -907,7 +914,7 @@ object Sparql {
     val tagged = graphVar.nonEmpty
     var df =
       if (transitiveHop)
-        transitive(store, edgeSet(store, fwdLocals, invLocals, tagged), seed)
+        transitive(edgeSet(store, fwdLocals, invLocals, tagged), seed)
       else { // p? — exactly one hop before the identity union below
         val e = edgeSet(store, fwdLocals, invLocals, tagged)
         seed.fold(e)(p => e.where(col("from") === p))

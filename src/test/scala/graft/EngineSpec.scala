@@ -5262,4 +5262,81 @@ class EngineSpec extends AnyFunSuite {
     // equality stays token-membership, not whole-string
     assert(q("system.lastModifiedBy::odd") == Set("/lmb/2"))
   }
+
+  // ---- qp filters in generated code, per-directory point reads ----
+
+  import graft.functions.SlotExists
+  import org.apache.spark.metrics.source.CodegenMetrics
+  import org.apache.spark.sql.execution.{FileSourceScanExec, FilterExec,
+    SparkPlan, WholeStageCodegenExec}
+  import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+
+  /** Janino compiles while `run` executes. */
+  private def compiles(run: => Unit): Long = {
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    run
+    CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+  }
+
+  private def finalPlan(df: DataFrame): SparkPlan =
+    df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+
+  test("a qp search's filter runs inside whole-stage codegen") {
+    val store = GraftStore.forDir(spark, Sf)
+    def search(status: String, price: Int, prio: String, lo: Int, hi: Int) =
+      Search.search(store, Search.Request(path = "/orders",
+        qp = Some(s"orderstatus::$status,totalprice>$price," +
+          s"-orderpriority::$prio,[*custkey<<$lo,*custkey>>$hi]")), length = 10)
+    val page = search("F", 1000, "1-URGENT", 50, 100)
+    assert(page.count() == 10)
+    page.collect()
+    // the comparands are reference objects, not literals in the
+    // generated code: new values in the same shape compile nothing
+    assert(compiles(search("O", 2000, "2-HIGH", 60, 90).collect()) == 0)
+    val filters = finalPlan(page).collect { case f: FilterExec => f }
+    val native = filters.filter(_.condition.exists(_.isInstanceOf[SlotExists]))
+    assert(native.nonEmpty, finalPlan(page).toString)
+    val inStage = finalPlan(page).collect { case w: WholeStageCodegenExec =>
+      w.collect { case f: FilterExec => f } }.flatten
+    native.foreach(f => assert(inStage.contains(f),
+      s"filter outside whole-stage codegen:\n${finalPlan(page)}"))
+  }
+
+  test("a point read pushes one IN per directory and skips other directories") {
+    val store = GraftStore.forDir(spark, Sf)
+    // 12 paths over 4 directories: one IN list would be a range from
+    // /customer/… to /supplier/…, which spans /lineitem
+    val keys = Seq("/customer/1", "/customer/7", "/customer/30",
+      "/orders/1", "/orders/3", "/orders/4", "/orders/5", "/orders/6",
+      "/part/2", "/part/9", "/supplier/1", "/supplier/3")
+    def scanned(df: DataFrame): (Long, String) = {
+      df.collect()
+      val scan = finalPlan(df).collect { case s: FileSourceScanExec => s }.head
+      (scan.metrics("numOutputRows").value, scan.metadata("PushedFilters"))
+    }
+    val read = Search.read(store, keys)
+    assert(paths(read) == keys.toSet)
+    val (rows, pushed) = scanned(read)
+    Seq("/customer/", "/orders/", "/part/", "/supplier/").foreach { d =>
+      assert(pushed.contains(s"In(system.path, [$d"), pushed)
+    }
+    // no /lineitem row group passes the per-directory filters
+    def under(ps: String*) =
+      store.infotons.where(col("system.parent").isin(ps: _*)).count()
+    val dirs = under("/customer", "/orders", "/part", "/supplier")
+    val lineitem = under("/lineitem")
+    assert(rows < dirs + lineitem,
+      s"scanned $rows rows; the four directories hold $dirs, /lineitem $lineitem")
+    // one IN list over all twelve reads /lineitem's row groups too
+    val (oneList, _) = scanned(store.current.where(col("system.path").isin(keys: _*)))
+    assert(oneList >= dirs + lineitem)
+    // other paths in the same directories compile no new code
+    val others = Seq("/customer/2", "/customer/8", "/customer/31",
+      "/orders/2", "/orders/7", "/orders/8", "/orders/9", "/orders/10",
+      "/part/3", "/part/10", "/supplier/2", "/supplier/4")
+    assert(compiles(Search.read(store, others).collect()) == 0)
+  }
 }
