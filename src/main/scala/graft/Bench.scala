@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** Benchmark main: times every declared query at SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line for the driver.
@@ -44,46 +44,12 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkEntry.session()
-
-    val t0 = System.nanoTime()
-    val store = graft.model.GraftStore.forDir(spark, sfDir)
-    store.infotons.count()
-    store.quads.count()
-    val etl = (System.nanoTime() - t0) / 1e9
-
-    // a failed query must surface red, not fast: collect per-query
-    // errors into the JSON line and exit nonzero if any
-    val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
     // local-iteration filter: SPARK_GRAFT_ONLY=q_a,q_b times just those
     // (the driver never sets it — full run)
     val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(',').map(_.trim).toSet)
-    // Sweep order: alphabetical, EXCEPT the five streaming-protocol
-    // queries (throughStream: parquet hand-off + real micro-batch
-    // start/drain/stop cycles). Their protocol work floods the
-    // scheduler with hundreds of tiny jobs and leaves stream-exec
-    // threads winding down into the NEXT query's timing window —
-    // r14's three new multi-second stream queries pushed the fresh/
-    // quiet median ratio 1.07 → 1.20. They now run as their own tail
-    // bucket after a settle pause, so their wake cannot inflate
-    // mainline measurements (same isolation the sf10 probe uses via
-    // session='ext'); stamped into the JSON as sweep_order.
-    val StreamTail = Set("q_qstream", "q_subscribe", "q_stream_window",
-      "q_stream_session", "q_stream_dedup")
-    // SPARK_GRAFT_XNODE=1 adds the hot-predicate probe queries (only
-    // meaningful on generator twins that carry xnodes.parquet; never
-    // part of the declared oracle surface)
-    val benchable = SparkEntry.queries ++
-      (if (sys.env.contains("SPARK_GRAFT_XNODE")) XnodeProbe.all
-       else Map.empty) ++
-      (if (sys.env.contains("SPARK_GRAFT_ANNPROD")) AnnProbe.all
-       else Map.empty)
-    val selected0 = benchable.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
-    val selected = selected0.filterNot(q => StreamTail(q._1)) ++
-      selected0.filter(q => StreamTail(q._1))
-    val tailStart = selected.indexWhere(q => StreamTail(q._1))
+      .map(_.split(',').map(_.trim).toSeq)
+    val h = new Harness(sfDir, only.getOrElse(Nil), _ == _)
+    val etl = h.etlSeconds
 
     // Quiet reference profile for THIS sf: bench_last.json when its sf
     // tag matches (the driver's sf0.1 artifact), else the per-sf
@@ -94,7 +60,7 @@ object Bench {
     // bursts inflate a random ~10-query window 3-8×; three driver
     // rounds in a row lost 20-50% of wall-time to it), never to cap a
     // measurement.
-    val sfTagEarly = sfDir.split('/').last
+    val sfTag = sfDir.split('/').last
     def parseQueries(path: String, sf: String): Option[Map[String, Double]] =
       try {
         val txt = new String(java.nio.file.Files.readAllBytes(
@@ -122,48 +88,41 @@ object Bench {
           java.nio.file.Paths.get("bench_last.json")), "UTF-8"))
         catch { case _: Throwable => None }
       lastTxt match {
-        case Some(txt) if txt.contains("\"sf\":\"" + sfTagEarly + "\"") =>
+        case Some(txt) if txt.contains("\"sf\":\"" + sfTag + "\"") =>
           "bench_last.json" // same sf — even if otherwise corrupt, rewrite it
-        case Some(txt) if !txt.contains("\"sf\":\"") && sfTagEarly == DriverSf =>
+        case Some(txt) if !txt.contains("\"sf\":\"") && sfTag == DriverSf =>
           "bench_last.json" // sf tag lost to corruption: repair at the driver sf
-        case Some(_) => s"bench_$sfTagEarly.json" // genuine sf mismatch
+        case Some(_) => s"bench_$sfTag.json" // genuine sf mismatch
         case None =>
-          if (sfTagEarly == DriverSf) "bench_last.json"
-          else s"bench_$sfTagEarly.json"
+          if (sfTag == DriverSf) "bench_last.json"
+          else s"bench_$sfTag.json"
       }
     }
     val refTimes: Map[String, Double] =
-      parseQueries(refPath, sfTagEarly).getOrElse(Map.empty)
+      parseQueries(refPath, sfTag).getOrElse(Map.empty)
 
-    // a query's persisted intermediates are released right after it is
-    // timed, so no query is timed against a neighbor's caches
-    def timeOnce(name: String, fn: (SparkSession, String) => DataFrame): Double = {
-      val t = System.nanoTime()
-      // noop sink, NOT count(): under count() Catalyst prunes every
-      // column and eliminates final sorts, so a pure-projection query
-      // (the whole per-doc text family) timed as a bare scan count —
-      // 0.1 s "operators" that never ran. The noop write materializes
-      // every output row with all columns, which is what a real
-      // consumer pays. (Rounds ≤ 7-start used count(); per-query
-      // history for projection queries is not comparable across that
-      // line — see STATUS.md.)
-      try { fn(spark, sfDir).write.format("noop").mode("overwrite").save() }
-      catch { case e: Throwable =>
-        errors += name -> s"${e.getClass.getSimpleName}: ${e.getMessage}".take(300)
-      }
-      val sec = (System.nanoTime() - t) / 1e9
-      graft.ops.Caches.releaseCaches()
-      // live progress on STDERR only — the driver parses stdout's
-      // single JSON line; this is for humans watching a long run
-      System.err.println(f"[bench] $name%-28s $sec%7.1f s")
-      sec
-    }
-    val firstPass = selected.zipWithIndex.map { case ((name, fn), i) =>
-      // settle pause at the mainline → stream-tail boundary: let the
-      // mainline's last query fully drain before protocol noise starts
-      if (i == tailStart && tailStart > 0) Thread.sleep(3000L)
-      name -> timeOnce(name, fn)
-    }
+    // noop sink, NOT count(): under count() Catalyst prunes every
+    // column and eliminates final sorts, so a pure-projection query
+    // (the whole per-doc text family) timed as a bare scan count —
+    // 0.1 s "operators" that never ran. The noop write materializes
+    // every output row with all columns, which is what a real
+    // consumer pays. (Rounds ≤ 7-start used count(); per-query
+    // history for projection queries is not comparable across that
+    // line — see STATUS.md.)
+    def noop(df: DataFrame): Unit =
+      df.write.format("noop").mode("overwrite").save()
+    // live progress on STDERR only — stdout carries just the one
+    // JSON line; this is for humans watching a long run
+    def progress(r: Harness.Run): Unit =
+      System.err.println(f"[bench] ${r.name}%-28s ${r.seconds}%7.1f s")
+    val firstRuns = h.runAll()((_, df) => noop(df))(progress)
+    val firstPass = firstRuns.map(r => r.name -> r.seconds)
+    // a failed query must surface red, not fast: per-query errors go
+    // into the JSON line and the exit code is nonzero
+    val errors = scala.collection.immutable.ListMap.from(firstRuns.collect {
+      case Harness.Run(n, _, _, Some(e)) =>
+        n -> s"${e.getClass.getSimpleName}: ${e.getMessage}".take(300)
+    })
 
     // Burst defense: re-time (at the end — contention bursts are
     // time-localized) any query that came in >2× its quiet reference,
@@ -195,16 +154,14 @@ object Bench {
     val results = if (suspects.isEmpty) firstPass else {
       val fixed = firstPass.toArray
       // a retry that THROWS must not poison the result: the first-pass
-      // measurement was valid, so drop the retry's error entry and its
-      // bogus time-to-failure instead of committing either
-      def retry(name: String, i: Int): Option[Double] = {
-        val before = errors.size
-        val t = timeOnce(name, selected(i)._2)
-        if (errors.size > before) { errors.remove(name); None }
-        else Some(t)
+      // measurement was valid, so the retry's bogus time-to-failure is
+      // dropped and no error is recorded
+      def retry(i: Int): Option[Double] = {
+        val r = h.runOne(h.selected(i))(noop)
+        progress(r)
+        Option.when(r.error.isEmpty)(r.seconds)
       }
-      def sweep(): Seq[Option[Double]] =
-        suspects.map { case ((name, _), i) => retry(name, i) }
+      def sweep(): Seq[Option[Double]] = suspects.map { case (_, i) => retry(i) }
       val s1 = sweep()
       Thread.sleep(RetimeGapMs)
       val s2 = sweep()
@@ -217,12 +174,6 @@ object Bench {
         retimed.map { case (n, (a, b)) => f"$n $a%.1f->$b%.1f" }.mkString(", "))
       fixed.toSeq
     }
-    def jq(s: String): String = "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     // The harness keeps only a 2000-char tail of stdout (round-3's
     // 2174-char line was head-truncated → parse failure), so the line
     // the driver parses must stay short: 1-decimal per-query values
@@ -240,16 +191,15 @@ object Bench {
       val s = String.format(java.util.Locale.ROOT, "%.1f", Double.box(v))
       if (s.endsWith(".0")) s.dropRight(2) else s
     }
-    val sfTag = sfDir.split('/').last
+    val errs =
+      if (errors.isEmpty) ""
+      else ",\"errors\":" + errors.map { case (k, v) => s"${Harness.json(k)}:${Harness.json(v)}" }
+        .mkString("{", ",", "}")
+    val total = results.map(_._2).sum
     def mkLine(hdr: Double => String, per: Double => String,
                keyOf: String => String = identity): String = {
       val qs = results.map { case (k, v) => "\"" + keyOf(k) + "\":" + per(v) }
         .mkString("{", ",", "}")
-      val errs =
-        if (errors.isEmpty) ""
-        else ",\"errors\":" + errors.map { case (k, v) => s"${jq(k)}:${jq(v)}" }
-          .mkString("{", ",", "}")
-      val total = results.map(_._2).sum
       s"""{"metric":"total","value":${hdr(total)},"unit":"sec","etl":${hdr(etl)},"queries":$qs$errs,"sf":"$sfTag"}"""
     }
     // bench_last.json keeps full fidelity plus the burst audit trail
@@ -270,7 +220,7 @@ object Bench {
       ",\"sweep_order\":\"stream_tail\""
       ) + (
       if (retimed.isEmpty) ""
-      else ",\"retimed\":" + retimed.map { case (n, (a, _)) => s"${jq(n)}:$a" }
+      else ",\"retimed\":" + retimed.map { case (n, (a, _)) => s"${Harness.json(n)}:$a" }
         .mkString("{", ",", "}"))
     if (only.isEmpty) {
       val freshLine = mkLine(_.toString, _.toString).dropRight(1) +
@@ -297,7 +247,7 @@ object Bench {
           val qs = refSeed.map { case (k, v) => "\"" + k + "\":" + v }
             .mkString("{", ",", "}")
           val refLine =
-            s"""{"metric":"total","value":${refSeed.map(_._2).sum},"unit":"sec","etl":$etl,"queries":$qs,"fresh_total":${results.map(_._2).sum},"median_ratio":$medianRatio$retimedField,"sf":"$sfTag"}"""
+            s"""{"metric":"total","value":${refSeed.map(_._2).sum},"unit":"sec","etl":$etl,"queries":$qs,"fresh_total":$total,"median_ratio":$medianRatio$retimedField,"sf":"$sfTag"}"""
           java.nio.file.Files.writeString(
             java.nio.file.Paths.get(refPath), refLine + "\n")
           System.err.println(String.format(java.util.Locale.ROOT,
@@ -312,7 +262,7 @@ object Bench {
     // interleaved WARN mid-line makes the JSON unparseable (round-3 bench
     // line was valid in bench_last.json but the driver recorded a parse
     // failure).
-    spark.stop()
+    h.spark.stop()
     // Graceful degradation inside the driver's 2000-char stdout tail:
     // a head-truncated line is a LOST bench (rounds 1 AND 3 both lost
     // their bench to this — sbt prints "[success] Total time: …" AFTER
@@ -334,11 +284,6 @@ object Bench {
         val qs = kept.map { case (k, v) =>
           "\"" + k.stripPrefix("q_") + "\":" + num1(v) }
           .mkString("{", ",", "}")
-        val errs =
-          if (errors.isEmpty) ""
-          else ",\"errors\":" + errors.map { case (k, v) => s"${jq(k)}:${jq(v)}" }
-            .mkString("{", ",", "}")
-        val total = results.map(_._2).sum
         line = s"""{"metric":"total","value":${num(total)},"unit":"sec","etl":${num(etl)},"queries":$qs,"qx_n":${dropped.size},"qx_sum":${num(dropped.map(_._2).sum)}$errs,"sf":"$sfTag"}"""
         line.length > Budget
       }) keep -= 1

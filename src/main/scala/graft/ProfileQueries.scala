@@ -13,34 +13,22 @@ import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
   */
 object ProfileQueries {
   def main(args: Array[String]): Unit = {
-    val sfDir = args(0)
     val repeats = args(1).toInt
-    val names = args.drop(2)
-    val spark = SparkEntry.session()
-    // per-run job accounting: jobs/stages/tasks and the per-job wall
-    // times tell WHERE a query's seconds go (action count vs one slow
+    val h = new Harness(args(0), args.drop(2).toSeq, _ == _)
+    // per-run job accounting: jobs/stages/tasks and the slowest stages
+    // tell WHERE a query's seconds go (action count vs one slow
     // stage) — the local stand-in for the Spark UI the guide §7.1 digs
     // through
     val jobs = new java.util.concurrent.atomic.AtomicInteger
     val stages = new java.util.concurrent.atomic.AtomicInteger
     val tasks = new java.util.concurrent.atomic.AtomicInteger
-    val jobTimes =
-      new java.util.concurrent.ConcurrentLinkedQueue[(Int, Long, Long)]()
     val stageTimes = new java.util.concurrent.ConcurrentLinkedQueue[
       (Int, Long, Int, String)]()
-    spark.sparkContext.addSparkListener(
+    h.spark.sparkContext.addSparkListener(
       new org.apache.spark.scheduler.SparkListener {
-        private val t0 = new java.util.concurrent.ConcurrentHashMap[
-          Integer, java.lang.Long]()
         override def onJobStart(
-            j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          jobs.incrementAndGet(); t0.put(j.jobId, j.time)
-        }
-        override def onJobEnd(
-            j: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
-          val s = t0.remove(j.jobId)
-          if (s != null) jobTimes.add((j.jobId, s.longValue, j.time))
-        }
+            j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          jobs.incrementAndGet()
         override def onStageCompleted(
             s: org.apache.spark.scheduler.SparkListenerStageCompleted)
             : Unit = {
@@ -53,49 +41,36 @@ object ProfileQueries {
             s.stageInfo.name.take(60)))
         }
       })
-    // warm the store ETL outside any timing, like Bench
-    val store = graft.model.GraftStore.forDir(spark, sfDir)
-    store.infotons.count(); store.quads.count()
-    names.foreach { name =>
-      SparkEntry.queries.get(name) match {
-        case None => System.err.println(s"[profile] unknown query $name")
-        case Some(fn) =>
-          (1 to repeats).foreach { i =>
-            jobs.set(0); stages.set(0); tasks.set(0); jobTimes.clear()
-            stageTimes.clear()
-            // codegen work: Janino compiles (a cache hit compiles
-            // nothing) and their time, as deltas over the run
-            val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-            val compileNs0 = CodeGenerator.compileTime
-            val t = System.nanoTime()
-            try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-            catch { case e: Throwable =>
-              System.err.println(s"[profile] $name run $i FAILED: " +
-                e.getMessage.take(200))
-            }
-            val sec = (System.nanoTime() - t) / 1e9
-            // settle: late listener events from the run's tail
-            Thread.sleep(200)
-            import scala.jdk.CollectionConverters._
-            val st = stageTimes.asScala.toSeq
-            val ssum = st.map(_._2 / 1e3).sum
-            val slow = st.sortBy(-_._2).take(5)
-              .map(s => f"${s._2 / 1e3}%.2fs/t${s._3}:${s._4}")
-              .mkString(" | ")
-            val compiles =
-              CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
-            val compileSec = (CodeGenerator.compileTime - compileNs0) / 1e9
-            println(f"[profile] $name%-30s run $i%2d  $sec%7.2f s  " +
-              f"jobs=${jobs.get}%3d compiles=$compiles%3d " +
-              f"compile_s=$compileSec%5.2f stages=${stages.get}%3d " +
-              f"tasks=${tasks.get}%4d stagesum=$ssum%6.2f")
-            println(s"[profile]   slowest stages: $slow")
-            // release after EVERY repeat: runs 2..K would otherwise
-            // time run 1's persisted intermediates as cache hits
-            graft.ops.Caches.releaseCaches()
-          }
-      }
+    // codegen work: Janino compiles (a cache hit compiles nothing) and
+    // their time, as deltas over each run
+    var compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    var compileNs0 = CodeGenerator.compileTime
+    h.runAll(repeats) { (_, df) =>
+      df.write.format("noop").mode("overwrite").save()
+    } { r =>
+      r.error.foreach(e => System.err.println(
+        s"[profile] ${r.name} run ${r.repeat} FAILED: " + e.getMessage.take(200)))
+      // settle: late listener events from the run's tail
+      Thread.sleep(200)
+      import scala.jdk.CollectionConverters._
+      val st = stageTimes.asScala.toSeq
+      val ssum = st.map(_._2 / 1e3).sum
+      val slow = st.sortBy(-_._2).take(5)
+        .map(s => f"${s._2 / 1e3}%.2fs/t${s._3}:${s._4}")
+        .mkString(" | ")
+      val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
+      val compileSec = (CodeGenerator.compileTime - compileNs0) / 1e9
+      println(f"[profile] ${r.name}%-30s run ${r.repeat}%2d  ${r.seconds}%7.2f s  " +
+        f"jobs=${jobs.get}%3d compiles=$compiles%3d " +
+        f"compile_s=$compileSec%5.2f stages=${stages.get}%3d " +
+        f"tasks=${tasks.get}%4d stagesum=$ssum%6.2f")
+      println(s"[profile]   slowest stages: $slow")
+      // the harness released the run's caches, so the next repeat is
+      // cache-cold; the counters start over for it
+      jobs.set(0); stages.set(0); tasks.set(0); stageTimes.clear()
+      compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      compileNs0 = CodeGenerator.compileTime
     }
-    spark.stop()
+    h.spark.stop()
   }
 }

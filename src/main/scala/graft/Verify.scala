@@ -7,39 +7,17 @@ object Verify {
     val (sfDir, outDir) = (args(0), args(1))
     // optional extra args: only run queries whose name contains one of
     // them (local iteration aid; the driver passes exactly two args)
-    val only = args.drop(2)
-    def wanted(name: String): Boolean =
-      only.isEmpty || only.exists(name.contains)
-    val spark = SparkEntry.session()
+    val h = new Harness(sfDir, args.drop(2).toSeq, _.contains(_))
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.foreach { case (name, fn) =>
-      if (wanted(name)) {
-        try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
-        catch { case e: Throwable =>
-          System.err.println(s"[verify] $name failed: ${e.getMessage}")
-        }
-        // the parquet write was the consuming action — drop the query's
-        // persisted intermediates so 250+ queries don't accumulate
-        // eviction pressure against the persisted store views
-        graft.ops.Caches.releaseCaches()
-      }
+    h.runAll() { (name, df) =>
+      df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+    } { r =>
+      r.error.foreach(e =>
+        System.err.println(s"[verify] ${r.name} failed: ${e.getMessage}"))
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${Harness.json(k)}: ${Harness.json(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    spark.stop()
+    h.spark.stop()
   }
 }

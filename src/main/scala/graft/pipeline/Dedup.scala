@@ -869,7 +869,7 @@ object Dedup {
     // P-curve on the ADVERSARIAL near-uniform decade corpus (50k
     // vectors, 32 cells, flat ceiling 0.812): P=1 0.523, P=2 0.571,
     // P=4 0.637, P=8 0.720, P=16 0.770, P=32 ≡ flat 0.812 exactly
-    // (Sem2lLossProbe — the ≡ also pins the 2L machinery's
+    // (STATUS.md, r17 headline — the ≡ also pins the 2L machinery's
     // bit-consistency with the flat argmin). Default P = ⌈cells/4⌉
     // (floor 2): assignment cost P·(k/√k)+√k dots/row stays ~√k-class
     // (the mining pass dominates end-to-end — measured +P made no

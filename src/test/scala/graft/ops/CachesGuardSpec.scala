@@ -4,12 +4,13 @@ import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
 
 /** Source guard: the session is built in one place
-  * ([[graft.SparkEntry.session]]) and every persist or local
-  * checkpoint goes through [[Caches]], so one release call per query
-  * frees it. The few raw sites whose lifetime is not one query are
-  * named here, each with its reason and its exact count. */
+  * ([[graft.SparkEntry.session]]), the declared queries are looped over
+  * in one place ([[graft.Harness]]) by the four harness mains alone,
+  * and every persist or local checkpoint goes through [[Caches]], so
+  * one release call per query frees it. The few raw sites whose
+  * lifetime is not one query are named here, each with its reason and
+  * its exact count. */
 class CachesGuardSpec extends AnyFunSuite {
-  private val root = new java.io.File("src/main/scala")
 
   private val allowed: Map[String, (Int, String)] = Map(
     "graft/model/GraftStore.scala" ->
@@ -27,8 +28,10 @@ class CachesGuardSpec extends AnyFunSuite {
     "graft/pipeline/Dedup.scala" ->
       (1, "connected-components edges, released by the operator in a finally"))
 
-  /** (relative path, code lines) of every main source, comments dropped. */
-  private lazy val sources: Seq[(String, Seq[String])] = {
+  /** (relative path, code lines) of every source under `dir`, comments
+    * dropped. */
+  private def sourcesIn(dir: String): Seq[(String, Seq[String])] = {
+    val root = new java.io.File(dir)
     assert(root.isDirectory, s"run from the repository root: $root")
     val base = root.toPath
     val walk = java.nio.file.Files.walk(base)
@@ -44,13 +47,32 @@ class CachesGuardSpec extends AnyFunSuite {
     finally walk.close()
   }
 
-  private def count(re: scala.util.matching.Regex): Map[String, Int] =
-    sources.map { case (f, ls) => f -> ls.map(re.findAllIn(_).size).sum }
+  private lazy val sources = sourcesIn("src/main/scala")
+
+  private def count(re: scala.util.matching.Regex,
+                    in: Seq[(String, Seq[String])] = sources): Map[String, Int] =
+    in.map { case (f, ls) => f -> ls.map(re.findAllIn(_).size).sum }
       .filter(_._2 > 0).toMap
 
   test("one SparkSession builder in src/main") {
     assert(count("""SparkSession\s*\.builder""".r) ==
       Map("graft/SparkEntry.scala" -> 1))
+  }
+
+  test("the declared queries are looped over only by the Harness") {
+    assert(count("""SparkEntry\s*\.\s*queries\b""".r).keySet ==
+      Set("graft/Harness.scala"))
+  }
+
+  private val main = """def\s+main\s*\(""".r
+
+  test("the four harness mains are the only mains in src/main") {
+    assert(count(main) == Seq("Bench", "Verify", "ProfileQueries",
+      "PlanDump").map(m => s"graft/$m.scala" -> 1).toMap)
+  }
+
+  test("no mains in src/test") {
+    assert(count(main, sourcesIn("src/test/scala")).isEmpty)
   }
 
   test("persists and local checkpoints go through Caches") {

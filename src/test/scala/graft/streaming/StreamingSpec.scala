@@ -4,6 +4,7 @@ import graft.model.{GraftStore, TableLoader}
 import graft.ops.Search
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -36,6 +37,15 @@ class StreamingSpec extends AnyFunSuite {
 
   private def store: GraftStore =
     new GraftStore(spark, spark.emptyDataFrame, Map("tag" -> "s"))
+
+  /** Asserts the last micro-batch's physical plan, as `q.explain()`
+    * prints it, names every one of `nodes`. */
+  private def assertPlanHas(q: StreamingQuery, nodes: String*): Unit = {
+    val buf = new java.io.ByteArrayOutputStream()
+    Console.withOut(new java.io.PrintStream(buf, true, "UTF-8"))(q.explain())
+    val plan = buf.toString("UTF-8")
+    nodes.foreach(n => assert(plan.contains(n), s"no $n in\n$plan"))
+  }
 
   test("subscribe tags matching rules per micro-batch, drops the rest") {
     import spark.implicits._
@@ -182,6 +192,7 @@ class StreamingSpec extends AnyFunSuite {
         .collect().map(r => (r.getTimestamp(0), r.getString(1), r.getLong(2)))
       assert(rows.contains((t("2024-01-01 00:00:00"), "a", 2L)))
       assert(rows.contains((t("2024-01-01 00:00:00"), "b", 1L)))
+      assertPlanHas(q, "EventTimeWatermark", "StateStoreSave")
     } finally q.stop()
   }
 
@@ -207,6 +218,8 @@ class StreamingSpec extends AnyFunSuite {
       val ids = spark.sql("SELECT doc_id FROM sdedup")
         .collect().map(_.getLong(0)).toSet
       assert(ids == Set(1L, 3L, 5L))
+      assertPlanHas(q, "EventTimeWatermark",
+        "StreamingDeduplicateWithinWatermark")
     } finally q.stop()
   }
 
@@ -243,6 +256,8 @@ class StreamingSpec extends AnyFunSuite {
         us("2024-01-01 00:10:00"), 3L))) // merged 3-event session
       assert(rows.contains((1L, us("2024-01-01 02:00:00"),
         us("2024-01-01 02:00:00"), 1L)))
+      assertPlanHas(q, "EventTimeWatermark", "SessionWindowStateStoreSave",
+        "MergingSessions")
     } finally q.stop()
   }
 

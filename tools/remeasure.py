@@ -47,8 +47,7 @@ def remeasure(query, sf_dir, extra_env=None, repo=None, timeout=5400):
             try:
                 qs = json.loads(line)["queries"]
                 # Bench's JSON line strips the "q_" prefix from query
-                # names (x_ probe names keep theirs); reporters hold
-                # either form
+                # names; reporters hold either form
                 t = qs.get(query)
                 if t is None and query.startswith("q_"):
                     t = qs.get(query[2:])
