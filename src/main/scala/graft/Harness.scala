@@ -12,10 +12,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * A filter that matches no declared query is named on stderr and the
   * JVM exits 2 before the session starts: a mistyped name must not pass
-  * as a run of nothing. */
+  * as a run of nothing. The mains print UTF-8 whatever the locale: under
+  * a POSIX locale JDK 17 encodes stdout and stderr as ASCII, and every
+  * non-ASCII character (an em dash in a message) prints as `?`. */
 final class Harness(val sfDir: String, filters: Seq[String],
                     matches: (String, String) => Boolean) {
   import Harness._
+
+  System.setOut(utf8(java.io.FileDescriptor.out))
+  System.setErr(utf8(java.io.FileDescriptor.err))
 
   val selected: Seq[(String, Query)] = {
     val queries = SparkEntry.queries
@@ -68,6 +73,11 @@ final class Harness(val sfDir: String, filters: Seq[String],
 
 object Harness {
   type Query = (SparkSession, String) => DataFrame
+
+  private def utf8(fd: java.io.FileDescriptor): java.io.PrintStream =
+    new java.io.PrintStream(new java.io.BufferedOutputStream(
+      new java.io.FileOutputStream(fd)), true,
+      java.nio.charset.StandardCharsets.UTF_8)
 
   /** One run of one query: `repeat` counts from 1, and `seconds` runs
     * to the failure when `error` is set. */

@@ -1,5 +1,6 @@
 package graft
 
+import graft.ops.Caches
 import graft.pipeline.{Curation, Dedup, Multimodal, Sessions, Similarity, TextAnalysis}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -25,36 +26,26 @@ object PipelineQueries {
     * THREE declared reads (q_dedup_jaccard, q_dedup_clusters,
     * q_pipeline_clean). In deployment the pair table and the cluster
     * assignment are materialized once per corpus snapshot and queried
-    * many times — so they're computed and persisted once per sf dir,
-    * like the merge family's mergedStore. */
-  // keyed by (session, dir), not dir alone: a cached frame is bound to
-  // the session that built it, and a same-JVM session restart must
-  // rebuild rather than serve a stale handle
-  private val pairsCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]()
-  private def jaccard(s: SparkSession, dir: String): DataFrame = {
-    graft.model.GraftStore.evictStopped(pairsCache)
-    pairsCache.computeIfAbsent((s, dir), { _ =>
+    * many times — so they're computed and persisted once per session
+    * and sf dir, like the merge family's mergedStore. Only the pairs
+    * and the clusters stay: the indexes their builds persist go with
+    * the building query's release. */
+  private def jaccard(s: SparkSession, dir: String): DataFrame =
+    Caches.perSession(s, s"jaccard:$dir") {
       val p = Dedup.jaccardPairs(docs(s, dir), n = 2, tau = 0.8)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      p.count()
-      p
-    })
-  }
-  private val ccCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]()
-  private def clusters(s: SparkSession, dir: String): DataFrame = {
-    graft.model.GraftStore.evictStopped(ccCache)
-    ccCache.computeIfAbsent((s, dir), { _ =>
+      val kept = Caches.sessionLifetime(Caches.persist(p))
+      kept.count()
+      kept
+    }
+  private def clusters(s: SparkSession, dir: String): DataFrame =
+    Caches.perSession(s, s"clusters:$dir") {
       // sessionLifetime: the persisted clusters sit on the final round's
       // local checkpoint, which cannot be recomputed once released
-      val cc = graft.ops.Caches.sessionLifetime(Dedup.connectedComponents(
-          jaccard(s, dir).select(col("d1").as("v1"), col("d2").as("v2"))))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val cc = Caches.sessionLifetime(Caches.persist(Dedup.connectedComponents(
+        jaccard(s, dir).select(col("d1").as("v1"), col("d2").as("v2")))))
       cc.count()
       cc
-    })
-  }
+    }
 
   /** Bounded grounding contract for the quadratic exact anchors.
     *
@@ -396,7 +387,7 @@ object PipelineQueries {
     // sf0.01.
     "q_dedup_embedding_lsh" -> ((s, dir) => {
       val e = emb(s, dir)
-      val g = graft.ops.Caches.persist(groundSample(e))
+      val g = Caches.persist(groundSample(e))
       val lsh = Dedup.embeddingDupPairsLsh(e, tau = 0.4).select("v1", "v2")
       // precision/recall are measured on pairs with BOTH endpoints in
       // the grounding sample (== all pairs at the gated sfs).
@@ -404,10 +395,10 @@ object PipelineQueries {
       // anti-joins and exact feeds those plus its own count — Catalyst
       // inlines each reference, so the LSH mining and the quadratic
       // anchor otherwise re-ran per consumer
-      val lshG = graft.ops.Caches.persist(lsh
+      val lshG = Caches.persist(lsh
         .join(g.select(col("vec_id").as("v1")), Seq("v1"), "left_semi")
         .join(g.select(col("vec_id").as("v2")), Seq("v2"), "left_semi"))
-      val exact = graft.ops.Caches.persist(
+      val exact = Caches.persist(
         Dedup.embeddingDupPairs(g, tau = 0.4).select("v1", "v2"))
       val extra = lshG.join(exact, Seq("v1", "v2"), "left_anti")
       val missed = exact.join(lshG, Seq("v1", "v2"), "left_anti")
@@ -438,27 +429,27 @@ object PipelineQueries {
       // exact-anchor union, both lshG endpoint semis) and planted
       // three — persist both (sample-sized) so the sample scan and
       // the planted-vector synthesis run once, not per reference
-      val g = graft.ops.Caches.persist(groundSample(e0))
-      val planted = graft.ops.Caches.persist(plantDups(g))
+      val g = Caches.persist(groundSample(e0))
+      val planted = Caches.persist(plantDups(g))
       val p = planted.select("vec_id", "embedding")
       val e = e0.unionByName(p)
       // one mining pass, materialized: three consumers below would
       // otherwise re-run the corpus shuffle (the probe measured
       // ENOSPC from exactly that at 5M vectors)
-      val lsh = graft.ops.Caches.localCheckpoint(
+      val lsh = Caches.localCheckpoint(
         Dedup.embeddingDupPairsLsh(e, tau = 0.9, tables = 0)
           .select("v1", "v2"))
       // planted truth pairs with their exact cosine — the recall
       // denominator (a plant whose true cosine lands under τ can
       // never be mined and must not count as a miss)
-      val truth = graft.ops.Caches.persist(planted.alias("p")
+      val truth = Caches.persist(planted.alias("p")
         .join(g.alias("g"), col("p.src") === col("g.vec_id"))
         .select(col("g.vec_id").as("v1"), col("p.vec_id").as("v2"),
           round(Similarity.cosineFixed(col("g.embedding"),
             col("p.embedding")), 6).as("cosine")))
       val truthTrue = truth.where(col("cosine") >= 0.9).select("v1", "v2")
       val found = truthTrue.join(lsh, Seq("v1", "v2"), "left_semi")
-      val su = graft.ops.Caches.persist(g.unionByName(p))
+      val su = Caches.persist(g.unionByName(p))
       val exact = Dedup.embeddingDupPairs(su, tau = 0.9).select("v1", "v2")
       val lshG = lsh
         .join(su.select(col("vec_id").as("v1")), Seq("v1"), "left_semi")
@@ -948,7 +939,7 @@ object PipelineQueries {
       val content = Multimodal.pngContentStore(s, docs(s, dir))
       // persist before sort — the PNG encode+decode pipeline would
       // otherwise run twice (range-sample pass + shuffle pass)
-      graft.ops.Caches.persist(Multimodal.decode(s, content)
+      Caches.persist(Multimodal.decode(s, content)
         .select(col("path"),
           col("width").cast("long").as("width"),
           col("height").cast("long").as("height"),
@@ -968,7 +959,7 @@ object PipelineQueries {
       // range-sample pass under orderBy re-executes its child, and
       // here the child is the whole encode+decode pipeline above the
       // last exchange — without the persist every image decodes twice
-      graft.ops.Caches.persist(Multimodal.decode(s, content)
+      Caches.persist(Multimodal.decode(s, content)
         .select(col("path"),
           col("width").cast("long").as("width"),
           col("height").cast("long").as("height"),
@@ -983,7 +974,7 @@ object PipelineQueries {
       val content = Multimodal.imageIoContentStore(s, docs(s, dir),
         "gif", "image/gif")
       // persist before sort — same double-decode rationale as the BMP
-      graft.ops.Caches.persist(Multimodal.decode(s, content)
+      Caches.persist(Multimodal.decode(s, content)
         .select(col("path"),
           col("width").cast("long").as("width"),
           col("height").cast("long").as("height"),
@@ -1002,7 +993,7 @@ object PipelineQueries {
       val docId = element_at(split(col("path"), "/"), 3).cast("long")
       val tone = (docId * 37) % 256
       // persist before sort — same double-decode rationale as the BMP
-      graft.ops.Caches.persist(Multimodal.decode(s, content)
+      Caches.persist(Multimodal.decode(s, content)
         .select(col("path"),
           col("width").cast("long").as("width"),
           col("height").cast("long").as("height"),
@@ -1019,7 +1010,7 @@ object PipelineQueries {
       val content = Multimodal.videoContentStore(s, docs(s, dir))
       // persist before sort — the frame split+decode pipeline would
       // otherwise run twice (range-sample pass + shuffle pass)
-      graft.ops.Caches.persist(Multimodal.decodeFrames(s, content)
+      Caches.persist(Multimodal.decodeFrames(s, content)
         .select(col("path"), col("frame_no").cast("long").as("frame_no"),
           col("width").cast("long").as("width"),
           col("height").cast("long").as("height"),
@@ -1039,7 +1030,7 @@ object PipelineQueries {
       val content = Multimodal.videoContentStore(s, docs(s, dir))
       // persist before sort — same double-decode rationale as
       // q_video_frames
-      graft.ops.Caches.persist(Multimodal.decodeFrames(s, content)
+      Caches.persist(Multimodal.decodeFrames(s, content)
         .where(col("frame_no") % 2 === 0)
         .select(col("path"), col("frame_no").cast("long").as("frame_no"),
           aggregate(transform(col("pixels"),
@@ -1062,7 +1053,7 @@ object PipelineQueries {
       val frames = Multimodal.decodeFrames(s, content)
       // persist before sort — same double-decode rationale as
       // q_video_frames
-      graft.ops.Caches.persist(
+      Caches.persist(
         Multimodal.resize(frames, 2, Seq("path", "frame_no"))
         .select(col("path"), col("frame_no").cast("long").as("frame_no"),
           col("width").cast("long").as("width"),
@@ -1092,7 +1083,7 @@ object PipelineQueries {
       // (probe side + the broadcast query side derives from it), and a
       // plan tree computes each reference separately — without the
       // persist every PNG decodes twice before the join even starts
-      val feats = graft.ops.Caches.persist(dec.select(col("path"),
+      val feats = Caches.persist(dec.select(col("path"),
         array((0 until 4).map(chunkSum): _*).as("f")))
       val queries = feats.where(col("path").isin(
           "/documents/0", "/documents/1", "/documents/2"))
@@ -1119,7 +1110,7 @@ object PipelineQueries {
       val content = Multimodal.wavContentStore(s, docs(s, dir))
       // persist before sort — the WAV decode pipeline would otherwise
       // run twice (range-sample pass + shuffle pass)
-      graft.ops.Caches.persist(Multimodal.decodeAudio(s, content)
+      Caches.persist(Multimodal.decodeAudio(s, content)
         .select(col("path"),
           col("sample_rate").cast("long").as("sample_rate"),
           size(col("samples")).cast("long").as("n_samples"),
@@ -1140,7 +1131,7 @@ object PipelineQueries {
         Multimodal.decodeAudio(s, content), 2)
       // persist before sort — same double-decode rationale as
       // q_audio_decode
-      graft.ops.Caches.persist(rs.select(col("path"),
+      Caches.persist(rs.select(col("path"),
           col("sample_rate").cast("long").as("sample_rate"),
           size(col("samples")).cast("long").as("n_samples"),
           aggregate(transform(col("samples"),
@@ -1165,7 +1156,7 @@ object PipelineQueries {
         round(e * lit(1073741824.0d)).cast("long")
       // persist before sort — same double-decode rationale as
       // q_audio_decode
-      graft.ops.Caches.persist(fr.select(col("path"),
+      Caches.persist(fr.select(col("path"),
           col("n_frames").cast("long").as("n_frames"),
           asInt(aggregate(col("frame_energy"), lit(0.0d), _ + _))
             .as("total_energy"),
@@ -1313,7 +1304,7 @@ object PipelineQueries {
       val content = Multimodal.wavContentStore(s, docs(s, dir))
       // persist before sort — same double-decode rationale as
       // q_audio_decode
-      graft.ops.Caches.persist(Multimodal.audioSpectra(
+      Caches.persist(Multimodal.audioSpectra(
           Multimodal.decodeAudio(s, content), 160, Seq(1, 2, 4, 8)))
         .orderBy("path", "frame")
     }),

@@ -4,7 +4,7 @@ import java.sql.Timestamp
 
 import graft.ingest.Ingest
 import graft.model.GraftStore
-import graft.ops.{Aggregations, Search}
+import graft.ops.{Aggregations, Caches, Search}
 import graft.qp.ApParser
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -37,13 +37,9 @@ object XwideQueries {
 
   private val T0 = Timestamp.valueOf("2026-01-01 00:00:00")
 
-  /** One wide store per (session, dir) — both reads share it, like the
-    * pipeline family's pair/cluster caches. */
-  private val cache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), GraftStore]()
-  private def wideStore(s: SparkSession, dir: String): GraftStore = {
-    GraftStore.evictStopped(cache)
-    cache.computeIfAbsent((s, dir), { _ =>
+  /** One wide store per (session, dir): both reads share it. */
+  private def wideStore(s: SparkSession, dir: String): GraftStore =
+    Caches.perSession(s, s"xwide:$dir") {
       import s.implicits._
       val nt = s.read.parquet(s"$dir/orders.parquet")
         .select(col("o_orderkey").cast("long"), col("o_custkey").cast("long"))
@@ -56,11 +52,10 @@ object XwideQueries {
             s"""<$p> <x://vocab#xbucket> "b${okey % 7}" .""")
         }
       // the ingest's persisted delta IS the store's data: kept for
-      // the cache entry's lifetime, not one query
-      graft.ops.Caches.sessionLifetime(GraftStore.fromInfotons(s,
+      // the session, not one query
+      Caches.sessionLifetime(GraftStore.fromInfotons(s,
         Ingest.ingest(s, Ingest.emptyStore(s), nt, T0)))
-    })
-  }
+    }
 
   val all: Map[String, (SparkSession, String) => DataFrame] = Map(
     // typed range filter on ONE dynamic key among 10k (slot dispatch

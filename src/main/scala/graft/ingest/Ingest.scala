@@ -150,11 +150,10 @@ object Ingest {
                                    sts: Dataset[Rdf.Statement],
                                    lastModified: Timestamp)
       : (DataFrame, DataFrame) = {
-    val cached = sts.persist(
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val cached = graft.ops.Caches.persist(sts)
     try Merger.mergeWithDelta(spark, infotons,
       commandsOf(spark, cached, lastModified))
-    finally cached.unpersist()
+    finally graft.ops.Caches.release(cached)
   }
 
   /** [[ingest]], also returning the batch delta (new rows only) — the

@@ -3,7 +3,6 @@ package graft.model
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
-import java.util.concurrent.ConcurrentHashMap
 
 /** A loaded infoton store: the `infotons` DataFrame plus derived views.
   *
@@ -128,22 +127,6 @@ final class GraftStore(val spark: SparkSession, val infotons: DataFrame,
 }
 
 object GraftStore {
-  // keyed by (session, dir): a same-JVM session restart must rebuild
-  // the store instead of serving frames bound to the dead session
-  private val cache = new ConcurrentHashMap[(SparkSession, String), GraftStore]()
-
-  /** Drop entries bound to STOPPED sessions — without this, every
-    * same-JVM session restart (the exact case the session key exists
-    * for) pins the dead session and its persisted frames in the
-    * static map forever. Called by each session-keyed cache before
-    * insert; the scan is over a handful of entries. */
-  private[graft] def evictStopped[V](
-      m: ConcurrentHashMap[(SparkSession, String), V]): Unit = {
-    val it = m.keySet.iterator()
-    while (it.hasNext)
-      if (it.next()._1.sparkContext.isStopped) it.remove()
-  }
-
   /** Write the store in its production parquet layout — the concrete
     * 100 TB design the in-memory persist stands in for:
     *   - `infotons/` partitioned by parent (path-prefix pruning for
@@ -363,7 +346,7 @@ object GraftStore {
     }
   }
 
-  /** Load (once per sf dir per JVM) the driver tables as an infoton
+  /** Load (once per sf dir per session) the driver tables as an infoton
     * store, MATERIALIZED in the production parquet layout and served
     * from it: infotons partitioned by parent, quads by predicate.
     * This is the deployment shape, not just the honest one — a
@@ -374,14 +357,13 @@ object GraftStore {
     * the one-time ETL (reported as `etl` by Bench, the analog of the
     * reference's indexing pipeline); queries never pay it. */
   def forDir(spark: SparkSession, dir: String): GraftStore = {
-    evictStopped(cache)
-    cache.computeIfAbsent((spark, dir), { case (s, d) =>
+    graft.ops.Caches.perSession(spark, s"store:$dir") {
       // the loader's session-side registrations (quad aliases) must
       // happen even when the WARM path skips TableLoader.load entirely
       TableLoader.registerAliases()
-      forParquet(s, etlCachedDir(s, d), TableLoader.fieldTypes,
+      forParquet(spark, etlCachedDir(spark, dir), TableLoader.fieldTypes,
         TableLoader.analyzedOnly)
-    })
+    }
   }
 
   /** Marker file that makes a published ETL directory valid — written

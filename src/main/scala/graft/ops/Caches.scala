@@ -1,14 +1,16 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.storage.StorageLevel
 
-/** The engine's one registry of persisted intermediates. Every frame an
-  * operator persists or local-checkpoints for the rest of a query is
-  * registered here, and every harness calls [[releaseCaches]] once
-  * after each query: no query runs on another's intermediates, and a
-  * long run never accumulates them.
+/** The engine's two lifetimes for Spark state: one query and one
+  * session.
+  *
+  * One query: every frame an operator persists or local-checkpoints for
+  * the rest of a query is registered here, and every harness calls
+  * [[releaseCaches]] once after each query: no query runs on another's
+  * intermediates, and a long run never accumulates them.
   *
   * Why operators persist at all: Catalyst plans are TREES, so a
   * DataFrame referenced twice in one result plan is COMPUTED twice
@@ -19,10 +21,14 @@ import org.apache.spark.storage.StorageLevel
   * components) local-checkpoint each round here to cut lineage.
   * Everything registered is result-, delta- or index-sized, never a
   * base table. An operator that knows an intermediate is dead early
-  * frees it with [[release]]. Longer lifetimes stay outside the
-  * registry: stores a session cache builds under [[sessionLifetime]],
-  * and the raw sites CachesGuardSpec names (store views, per-corpus
-  * fixtures, a stream's snapshot chain). */
+  * frees it with [[release]].
+  *
+  * One session: [[perSession]] is the one memo for values served to
+  * several queries of a session (stores, merged store clones, pair and
+  * cluster corpora). A build that keeps its own persists for the
+  * session says so with [[sessionLifetime]]. Outside both stay only the
+  * raw sites CachesGuardSpec names (the quads view, a stream's snapshot
+  * chain). */
 object Caches {
   private val registered =
     new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
@@ -30,6 +36,12 @@ object Caches {
 
   private def register(df: DataFrame): Unit =
     if (!unregistered.get) registered.add(df)
+
+  private def scoped[A](unregister: Boolean)(body: => A): A = {
+    val outer = unregistered.get
+    unregistered.set(unregister)
+    try body finally unregistered.set(outer)
+  }
 
   /** Persist a multi-referenced intermediate (MEMORY_AND_DISK) and
     * register it for the end-of-query release. */
@@ -47,13 +59,36 @@ object Caches {
     c
   }
 
-  /** For a session cache's build (a store served to several queries):
-    * what `build` persists or checkpoints on this thread is not
-    * registered, so it stays for the session instead of one query. */
-  def sessionLifetime[A](build: => A): A = {
-    val outer = unregistered.get
-    unregistered.set(true)
-    try build finally unregistered.set(outer)
+  /** For a [[perSession]] build: what `build` persists or checkpoints
+    * on this thread is not registered, so it stays for the session
+    * instead of one query. */
+  def sessionLifetime[A](build: => A): A = scoped(unregister = true)(build)
+
+  /** A [[perSession]] value, built once by the first caller. A build
+    * that throws leaves the entry empty, so the next caller retries. */
+  private final class Held(build: () => Any) { lazy val value: Any = build() }
+
+  // keyed by (session, key): a same-JVM session restart must rebuild
+  // instead of serving frames bound to the dead session
+  private val held =
+    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), Held]()
+
+  /** The value `build` gives for (`spark`, `key`), built once per
+    * session and served to every later caller. `key` names what is
+    * built and from which input (`"store:<dir>"`). The build always
+    * starts in the registered scope, whatever scope its caller is in:
+    * its per-query intermediates go to the caller's release, and only
+    * what it wraps in [[sessionLifetime]] stays. Entries of stopped
+    * sessions are dropped first, so a session restart does not pin the
+    * dead session's frames. Builds may call [[perSession]] for other
+    * keys. */
+  def perSession[A](spark: SparkSession, key: String)(build: => A): A = {
+    val it = held.keySet.iterator()
+    while (it.hasNext)
+      if (it.next()._1.sparkContext.isStopped) it.remove()
+    held.computeIfAbsent((spark, key),
+      _ => new Held(() => scoped(unregister = false)(build)))
+      .value.asInstanceOf[A]
   }
 
   /** Free one intermediate now (non-blocking): the frame [[persist]]

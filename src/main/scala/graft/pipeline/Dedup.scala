@@ -71,8 +71,9 @@ object Dedup {
 
   /** Inverted index with shingles hashed to 64-bit keys — the form the
     * join-heavy operators (Jaccard, MinHash) share: long shuffles beat
-    * string shuffles, and identical plans share one cached
-    * materialization across queries. */
+    * string shuffles. Persisted for the query that builds it: a second
+    * build over the same plan within that query (MinHash signatures,
+    * then its verify) reads the one cached materialization. */
   def hashedShingleIndex(docs: DataFrame, n: Int,
                          textCol: String = "text"): DataFrame =
     Caches.persist(shingleIndex(docs, n, textCol)
@@ -293,10 +294,6 @@ object Dedup {
     idx.groupBy("doc_id").agg(aggs.head, aggs.tail: _*)
   }
 
-  /** MinHash + LSH near-dup pairs: band the signatures, bucket-join,
-    * then verify candidates with EXACT Jaccard (so precision is 1.0 and
-    * only recall depends on the banding). bands*rowsPerBand must equal
-    * numHashes. */
   /** MinHash BAND-BUCKET INDEX: (doc_id, band, bh) — the written
     * index artifact of MinHash LSH. Built once per accepted batch and
     * unioned into the corpus index (at rest: bucketed by (band, bh)),
@@ -318,6 +315,10 @@ object Dedup {
       .select(col("doc_id"), col("b.band"), col("b.bh"))
   }
 
+  /** MinHash + LSH near-dup pairs: band the signatures, bucket-join,
+    * then verify candidates with EXACT Jaccard (so precision is 1.0 and
+    * only recall depends on the banding). bands*rowsPerBand must equal
+    * numHashes. */
   def minhashLsh(docs: DataFrame, n: Int = 2, numHashes: Int = 128,
                  bands: Int = 32, tau: Double = 0.8,
                  textCol: String = "text"): DataFrame = {
@@ -413,17 +414,17 @@ object Dedup {
       .where(col("hamming") <= maxHamming)
   }
 
-  /** Embedding-cosine near-dup pairs, EXACT: a plain self-join,
-    * quadratic in the corpus — the exact baseline, same role
-    * brute-force [[Similarity.cosineTopK]] plays for ANN. Use when the
-    * corpus (or a filtered slice of it) is small enough to square; the
-    * 100 TB path is [[embeddingDupPairsLsh]]. */
   /** Largest slice [[embeddingDupPairs]] will square. 100k × 64-dim
     * float vectors ≈ 30 MB broadcast and 5e9 candidate pairs — the
     * outer edge of where an exact quadratic pass is ever the right
     * tool; anything larger belongs to the LSH path. */
   val EmbeddingExactMax = 100000L
 
+  /** Embedding-cosine near-dup pairs, EXACT: a plain self-join,
+    * quadratic in the corpus — the exact baseline, same role
+    * brute-force [[Similarity.cosineTopK]] plays for ANN. Use when the
+    * corpus (or a filtered slice of it) is small enough to square; the
+    * 100 TB path is [[embeddingDupPairsLsh]]. */
   def embeddingDupPairs(emb: DataFrame, tau: Double): DataFrame = {
     val raw = emb.select(col("vec_id"), col("embedding"))
     // the 'squarable slice' contract, enforced loud (mirrors the
@@ -522,10 +523,10 @@ object Dedup {
     * standard guard for iterative frames. Nodes outside any pair are
     * not emitted (singletons are their own root by definition). */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 25): DataFrame = {
-    val edges = pairs.select(col("v1").as("src"), col("v2").as("dst"))
-      .unionByName(pairs.select(col("v2").as("src"), col("v1").as("dst")))
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val edges = Caches.persist(
+      pairs.select(col("v1").as("src"), col("v2").as("dst"))
+        .unionByName(pairs.select(col("v2").as("src"), col("v1").as("dst")))
+        .distinct())
     // each round's checkpoint is released once the next is
     // materialized; the last one is the result and stays registered
     var ck = Caches.localCheckpoint(edges.select(col("src").as("node"))
@@ -562,7 +563,7 @@ object Dedup {
       ck = next
       labels = next.drop("chg")
       iter += 1
-    } finally edges.unpersist(false)
+    } finally Caches.release(edges)
     require(converged, s"connected components still changing after " +
       s"$maxIter rounds — raise maxIter (diameter-bound exceeded)")
     labels.select(col("node").as("member"), col("label").as("root"))

@@ -397,55 +397,13 @@ object Similarity {
     cosineTopK(recon, queryIds, k)
   }
 
-  /** IVF (inverted-file) ANN — the trained-quantizer alternative to
-    * hyperplane LSH: a k-means coarse quantizer over the normalized
-    * corpus assigns every vector to one of `nlist` cells; a query
-    * probes its `nprobe` most-similar cells and ranks exactly inside
-    * them, scanning ~nprobe/nlist of the corpus. At 100 TB the corpus
-    * is written partitioned by cell, so a probe reads nprobe
-    * partitions; the quantizer (nlist × dim doubles) is driver-tiny
-    * and ships as literals. Euclidean k-means on unit vectors orders
-    * like cosine, so the cells are angular regions.
-    *
-    * `assign` > 1 is SPILL ASSIGNMENT: each vector is indexed in its
-    * `assign` nearest cells (index grows `assign`×), so a neighbor
-    * sitting just across a cell boundary stays findable — the
-    * corpus-side analog of query multi-probe. On the near-uniform
-    * synthetic fixtures (neighbors at cosine ≈ 0.35 — the adversarial
-    * case for cell methods) measured recall@5 at nprobe/nlist = 1/2 is
-    * 0.40 single-assignment, 0.87 with assign=2. [[lshTopK]]'s
-    * multi-probe union (recall 0.96 there) stays the default scale
-    * path; prefer IVF when the embedding space has real cluster
-    * structure. */
-  /** Trained coarse quantizers, memoized per (corpus plan, nlist,
-    * seed): the quantizer is an INDEX artifact — trained once when the
-    * corpus is indexed (the IVF build step), probed by every query.
-    * Re-fitting k-means per query would charge the build to the read
-    * path. Only the centroids are kept (all the scan side needs). */
-  private val quantizers = new java.util.concurrent.ConcurrentHashMap[
-    (String, String, Int, Long), Array[Array[Double]]]()
-
-  /** Disk side of the index-artifact discipline, shared ACROSS JVMs —
-    * the same warm-start as the store ETL ([[graft.model.GraftStore]]):
-    * quantizers/codebooks are fitted once at indexing time, so a fresh
-    * JVM over the SAME corpus bytes must not re-pay the bounded-sample
-    * k-means (the single biggest steady cost of q_knn_pq). The
-    * artifact name carries BOTH the canonical-plan MD5 and a CONTENT
-    * fingerprint of the corpus' input files (path+size+mtime) — a
-    * regenerated corpus behind an identical plan gets a fresh fit,
-    * which the in-JVM plan-keyed map alone could not guarantee across
-    * processes. Values are driver-tiny (≤ k×dim doubles); writes are
-    * temp + ATOMIC_MOVE so concurrent JVMs race benignly; a corrupt or
-    * unreadable file falls back to refit. In-memory sources (no input
-    * files) skip the disk layer. */
   /** Content fingerprint of a frame's input files (path+size+mtime),
     * stat'd through the Hadoop FileSystem of each path — size+mtime is
     * available for file:// AND hdfs/s3, so a remote corpus regenerated
     * in place behind an identical canonical plan gets a fresh
     * fingerprint (a java.nio-only stat silently disabled content
-    * keying off-local-disk). None (stat failure or in-memory source)
-    * disables BOTH the disk artifact layer and cross-content reuse of
-    * the in-JVM maps. */
+    * keying off-local-disk). None on a stat failure or an in-memory
+    * source. */
   private def contentFingerprint(df: DataFrame): Option[String] = {
     val files = df.inputFiles
     if (files.isEmpty) return None
@@ -461,17 +419,6 @@ object Similarity {
       Some(md.digest().map("%02x".format(_)).mkString)
     } catch { case _: Exception => None }
   }
-
-  /** Embedding dimension probe, used ONLY when the content fingerprint
-    * is unavailable (rare: stat failure / in-memory source) to keep
-    * dim in the in-JVM quantizer key — without it an in-place corpus
-    * regeneration at a different dimension behind an identical plan
-    * could serve wrong-shaped centroids. One `limit(1)` job, paid only
-    * on that fallback path. */
-  private def dimProbe(base: DataFrame): Int =
-    try base.select(org.apache.spark.sql.functions.size(col("embedding")))
-      .limit(1).collect().headOption.map(_.getInt(0)).getOrElse(-1)
-    catch { case _: Exception => -1 }
 
   // ---- plain-primitive artifact codec ----------------------------------
   // Artifacts are nested double arrays (IVF centroids: rank 2; PQ
@@ -528,15 +475,58 @@ object Similarity {
     } catch { case _: Exception => None }
   }
 
-  private def diskArtifact[T](ck: Option[String], name: String,
+  /** Trained index artifacts (IVF quantizers, SemDeDup fine centroids,
+    * PQ codebooks), memoized in the JVM and on disk. An artifact is
+    * fitted once when the corpus is indexed (the build step) and probed
+    * by every query: re-fitting per query would charge the build to the
+    * read path.
+    *
+    * The key is the artifact's kind, the 128-bit MD5 of the corpus'
+    * canonical plan (a 32-bit hash could silently hand a colliding
+    * corpus another corpus' artifact), its params and the corpus'
+    * [[contentFingerprint]]: a corpus regenerated in place behind an
+    * identical plan gets a fresh fit. The canonical plan of an
+    * in-memory frame omits its rows, so a corpus with no fingerprint
+    * gets neither layer and is fitted on every call. The in-JVM map is
+    * bounded at [[ArtifactsMax]] entries, so a long-lived session over
+    * many corpora cannot grow it without limit.
+    *
+    * The disk layer is shared ACROSS JVMs — the same warm-start as the
+    * store ETL ([[graft.model.GraftStore]]): a fresh JVM over the SAME
+    * corpus bytes must not re-pay the bounded-sample k-means (the
+    * single biggest steady cost of q_knn_pq). Values are driver-tiny
+    * (≤ k×dim doubles); writes are temp + ATOMIC_MOVE so concurrent
+    * JVMs race benignly; a corrupt or unreadable file falls back to
+    * refit. */
+  private def indexArtifact[T <: AnyRef](
+      kind: String, corpus: DataFrame, params: Seq[Any],
+      enc: (java.io.DataOutputStream, T) => Unit,
+      dec: java.io.DataInputStream => T)(fit: => T): T =
+    contentFingerprint(corpus) match {
+      case None => fit
+      case Some(ck) =>
+        val plan = java.security.MessageDigest.getInstance("MD5")
+          .digest(corpus.queryExecution.analyzed.canonicalized.toString
+            .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+          .map("%02x".format(_)).mkString
+        val name = (Seq(kind, plan) ++ params).mkString("_")
+        if (artifacts.size >= ArtifactsMax) artifacts.clear()
+        artifacts.computeIfAbsent(s"${name}_$ck",
+          _ => diskArtifact(ck, name, enc, dec)(fit)).asInstanceOf[T]
+    }
+
+  private val ArtifactsMax = 48
+  private val artifacts =
+    new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
+
+  private def diskArtifact[T](ck: String, name: String,
                               enc: (java.io.DataOutputStream, T) => Unit,
                               dec: java.io.DataInputStream => T)
                              (fit: => T): T = {
     import java.nio.file.Files
-    val dirOpt = if (ck.isEmpty) None else artifactDir
-    if (dirOpt.isEmpty) return fit
-    val dir = dirOpt.get
-    val f = dir.resolve(s"${name}_${ck.get}.bin")
+    if (artifactDir.isEmpty) return fit
+    val dir = artifactDir.get
+    val f = dir.resolve(s"${name}_$ck.bin")
     def fitAndSave(): T = {
       val v = fit
       val tmp = Files.createTempFile(dir, name, ".tmp")
@@ -561,6 +551,26 @@ object Similarity {
     else fitAndSave()
   }
 
+  /** IVF (inverted-file) ANN — the trained-quantizer alternative to
+    * hyperplane LSH: a k-means coarse quantizer over the normalized
+    * corpus assigns every vector to one of `nlist` cells; a query
+    * probes its `nprobe` most-similar cells and ranks exactly inside
+    * them, scanning ~nprobe/nlist of the corpus. At 100 TB the corpus
+    * is written partitioned by cell, so a probe reads nprobe
+    * partitions; the quantizer (nlist × dim doubles) is driver-tiny
+    * and ships as literals. Euclidean k-means on unit vectors orders
+    * like cosine, so the cells are angular regions.
+    *
+    * `assign` > 1 is SPILL ASSIGNMENT: each vector is indexed in its
+    * `assign` nearest cells (index grows `assign`×), so a neighbor
+    * sitting just across a cell boundary stays findable — the
+    * corpus-side analog of query multi-probe. On the near-uniform
+    * synthetic fixtures (neighbors at cosine ≈ 0.35 — the adversarial
+    * case for cell methods) measured recall@5 at nprobe/nlist = 1/2 is
+    * 0.40 single-assignment, 0.87 with assign=2. [[lshTopK]]'s
+    * multi-probe union (recall 0.96 there) stays the default scale
+    * path; prefer IVF when the embedding space has real cluster
+    * structure. */
   def ivfTopK(emb: DataFrame, queryIds: Seq[Long], k: Int,
               nlist: Int = 0, nprobe: Int = 0,
               assign: Int = 2, seed: Long = 42L): DataFrame = {
@@ -585,43 +595,22 @@ object Similarity {
           math.ceil(math.sqrt(n.toDouble)).toInt - 1) * 2)
       }
     val nP = if (nprobe > 0) nprobe else math.max(8, nL / 16)
-    // 128-bit canonical-plan key (a 32-bit hash could silently hand a
-    // colliding corpus another corpus's quantizer); bounded so a
-    // long-lived session over many corpora can't grow without limit.
-    // Like any plan-keyed cache, rewriting the files BEHIND an
-    // identical plan requires a new session (same property as the
-    // store view cache).
-    val planKey = java.security.MessageDigest.getInstance("MD5")
-      .digest(base.queryExecution.analyzed.canonicalized.toString
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      .map("%02x".format(_)).mkString
-    if (quantizers.size > 16) quantizers.clear()
-    // the CONTENT fingerprint joins the in-JVM key too: an in-place
-    // corpus regeneration (same path, same canonical plan — possibly a
-    // different dimension) must refit, not serve stale centroids
-    val ck = contentFingerprint(base)
-    // fingerprint-less fallback keys on a probed dim so a regenerated
-    // in-memory corpus at a new dimension can't hit stale centroids
-    val ckKey = ck.getOrElse(s"dim=${dimProbe(base)}")
-    val cents = quantizers.computeIfAbsent(
-      (planKey, ckKey, nL, seed), { _ =>
-      diskArtifact(ck, s"ivf_${planKey}_${nL}_$seed",
-                   writeMat, readMat) {
-        // the quantizer trains on a BOUNDED SAMPLE of normalized vectors
-        // (angular cells; cell rank per vector is scale-invariant, so
-        // the scan side keeps raw arrays). Coarse quantizers need a few
-        // thousand points per cell, not the corpus — at 100 TB the fit
-        // reads 64k rows, the standard IVF build recipe (faiss trains
-        // the same way), and k-means cost stays independent of corpus
-        // size. maxIter 10: centroid drift past that is far below cell-
-        // boundary noise that spill assignment already absorbs.
-        val fit = base.limit(64 * 1024)
-          .select(array_to_vector(normalized(col("embedding"))).as("fv"))
-        new KMeans().setK(nL).setSeed(seed).setMaxIter(10)
-          .setFeaturesCol("fv").setPredictionCol("cell")
-          .fit(fit).clusterCenters.map(_.toArray)
-      }
-    })
+    val cents = indexArtifact("ivf", base, Seq(nL, seed),
+                              writeMat, readMat) {
+      // the quantizer trains on a BOUNDED SAMPLE of normalized vectors
+      // (angular cells; cell rank per vector is scale-invariant, so
+      // the scan side keeps raw arrays). Coarse quantizers need a few
+      // thousand points per cell, not the corpus — at 100 TB the fit
+      // reads 64k rows, the standard IVF build recipe (faiss trains
+      // the same way), and k-means cost stays independent of corpus
+      // size. maxIter 10: centroid drift past that is far below cell-
+      // boundary noise that spill assignment already absorbs.
+      val fit = base.limit(64 * 1024)
+        .select(array_to_vector(normalized(col("embedding"))).as("fv"))
+      new KMeans().setK(nL).setSeed(seed).setMaxIter(10)
+        .setFeaturesCol("fv").setPredictionCol("cell")
+        .fit(fit).clusterCenters.map(_.toArray)
+    }
     // Top-`n` cells for a vector, computed IN-ROW via ONE native
     // CentroidTopN node (the quantizer rides as a reference object):
     // the former per-centroid literal dot structs + sort_array stop
@@ -694,10 +683,11 @@ object Similarity {
     kmeans(emb, k, iters, KmeansLiteralMax)
 
   /** Largest k assigned through inline centroid literals; beyond it
-    * the broadcast-join path takes over (see [[kmeans]]). Measured
-    * crossover at sf0.1/dim 64: k=40 literal 4.0 s vs join 1.6 s —
-    * the k×dim literal tree's analysis/codegen cost dominates well
-    * before the arithmetic does, so only genuinely small k stays
+    * the [[graft.functions.CentroidArgmin]] loop takes over (see
+    * [[kmeans]]). The k×dim literal tree's analysis/codegen cost
+    * dominates well before the arithmetic does (at sf0.1/dim 64, k=40
+    * took 4.0 s as literals against 1.6 s for the assignment join that
+    * CentroidArgmin later replaced), so only genuinely small k stays
     * inline. */
   val KmeansLiteralMax = 16
 
@@ -719,7 +709,7 @@ object Similarity {
 
   /** Assignment frame for a fixed centroid set over the cached
     * (vec_id, v) corpus: k native-dot literal structs at small k, the
-    * [[graft.functions.CellArgmin CentroidArgmin]] reference-object
+    * [[graft.functions.CentroidArgmin]] reference-object
     * loop past [[KmeansLiteralMax]] (identical arithmetic both ways:
     * index-ordered dots, dist = cc − 2·(c·v), ties to the lowest
     * cluster id — no n×k row expansion either way). */
@@ -781,30 +771,16 @@ object Similarity {
   /** Final Lloyd centroids only — [[kmeans]]' loop without the
     * assignment materialization. The fine-level quantizer of the
     * two-level SemDeDup ([[graft.pipeline.Dedup.semanticPairs2L]]),
-    * under the same index-artifact discipline as the IVF quantizer:
-    * memoized in-JVM per (plan, content, k, iters) and on disk across
-    * JVMs, because the fit is a BUILD cost paid once per corpus
-    * snapshot, not per query. */
-  private val semCents = new java.util.concurrent.ConcurrentHashMap[
-    (String, String, Int, Int), IndexedSeq[IndexedSeq[Double]]]()
+    * memoized per (plan, content, k, iters) like the IVF quantizer
+    * ([[indexArtifact]]), because the fit is a BUILD cost paid once per
+    * corpus snapshot, not per query. */
   private[graft] def kmeansCentroids(emb: DataFrame, k: Int, iters: Int)
-      : IndexedSeq[IndexedSeq[Double]] = {
-    val planKey = java.security.MessageDigest.getInstance("MD5")
-      .digest(emb.queryExecution.analyzed.canonicalized.toString
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      .map("%02x".format(_)).mkString
-    if (semCents.size > 16) semCents.clear()
-    val ck = contentFingerprint(emb)
-    val ckKey = ck.getOrElse(s"dim=${dimProbe(emb)}")
-    semCents.computeIfAbsent((planKey, ckKey, k, iters), { _ =>
-      diskArtifact(ck, s"sem2l_${planKey}_${k}_$iters",
-                   writeMat, readMat) {
-        val (e, cents) = kmeansLoop(emb, k, iters, KmeansLiteralMax)
-        Caches.release(e)
-        cents.map(_.toArray).toArray
-      }.map(_.toIndexedSeq).toIndexedSeq
-    })
-  }
+      : IndexedSeq[IndexedSeq[Double]] =
+    indexArtifact("sem2l", emb, Seq(k, iters), writeMat, readMat) {
+      val (e, cents) = kmeansLoop(emb, k, iters, KmeansLiteralMax)
+      Caches.release(e)
+      cents.map(_.toArray).toArray
+    }.map(_.toIndexedSeq).toIndexedSeq
 
   /** Pure-driver Lloyd over a SMALL point set — the COARSE level of
     * the two-level SemDeDup, clustering the k fine centroids
@@ -936,11 +912,6 @@ object Similarity {
         col("neighbor_id").as("neg_id"), (col("rank") - 1).as("neg_rank"))
   }
 
-  /** PQ codebook cache — an index artifact keyed by corpus plan +
-    * params, same lifecycle discipline as [[quantizers]]. */
-  private val pqCodebooks = new java.util.concurrent.ConcurrentHashMap[
-    (String, String, Int, Int, Int, Long), Array[Array[Array[Double]]]]()
-
   /** PRODUCT-QUANTIZED ANN (Jégou et al. 2011 — the faiss `PQ<m>`
     * recipe; the FOURTH index family next to LSH buckets, IVF cells
     * and the JL sketch): the normalized D-dim vector splits into `m`
@@ -975,31 +946,20 @@ object Similarity {
     import spark.implicits._
     val base = emb.select(col("vec_id"), col("embedding"))
     val nrm = base.select(col("vec_id"), normalized(col("embedding")).as("nv"))
-    val planKey = java.security.MessageDigest.getInstance("MD5")
-      .digest(base.queryExecution.analyzed.canonicalized.toString
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      .map("%02x".format(_)).mkString
-    if (pqCodebooks.size > 16) pqCodebooks.clear()
-    // dim and the content fingerprint are part of the key: same corpus
-    // + different dim, or an in-place regeneration behind the same
-    // plan, must not reuse codebooks trained for the wrong data
-    val ck = contentFingerprint(base)
-    val books = pqCodebooks.computeIfAbsent(
-      (planKey, ck.getOrElse(""), m, ksub, dim, seed), { _ =>
-      diskArtifact(ck, s"pq_${planKey}_${m}_${ksub}_${dim}_$seed",
-                   writeMats, readMats) {
-        val sample = nrm.limit(64 * 1024)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try (0 until m).map { j =>
-          val fit = sample.select(array_to_vector(
-            slice(col("nv"), j * dsub + 1, dsub)).as("fv"))
-          new KMeans().setK(ksub).setSeed(seed + j).setMaxIter(10)
-            .setFeaturesCol("fv").setPredictionCol("code").fit(fit)
-            .clusterCenters.map(_.toArray)
-        }.toArray
-        finally { sample.unpersist(false); () }
-      }
-    })
+    // dim is part of the key: the same corpus at another dim must not
+    // reuse codebooks trained for the wrong shape
+    val books = indexArtifact("pq", base, Seq(m, ksub, dim, seed),
+                              writeMats, readMats) {
+      val sample = Caches.persist(nrm.limit(64 * 1024))
+      try (0 until m).map { j =>
+        val fit = sample.select(array_to_vector(
+          slice(col("nv"), j * dsub + 1, dsub)).as("fv"))
+        new KMeans().setK(ksub).setSeed(seed + j).setMaxIter(10)
+          .setFeaturesCol("fv").setPredictionCol("code").fit(fit)
+          .clusterCenters.map(_.toArray)
+      }.toArray
+      finally Caches.release(sample)
+    }
     // encode in-row: per subspace the nearest centroid by L2 =
     // argmin(c·c/2 − sub·c), ties to the lowest code — ONE PqEncode
     // node for all m subspaces (the former per-subspace negated-

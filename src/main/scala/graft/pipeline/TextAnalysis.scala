@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import graft.ops.Caches
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -623,11 +624,10 @@ object TextAnalysis {
     // computeParallel: the tokenize+explode feeding the vocab count is
     // the corpus-sized pass of BPE training and runs pre-shuffle — a
     // single-split corpus would tokenize serially (no-op at scale)
-    var words = Similarity.computeParallel(docs)
+    var words = Caches.persist(Similarity.computeParallel(docs)
       .select(explode(tokens(col(textCol))).as("w"))
       .groupBy("w").agg(count(lit(1)).as("freq"))
-      .select(col("freq"), chars.as("syms"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .select(col("freq"), chars.as("syms")))
     val out = scala.collection.mutable.ArrayBuffer.empty[(String, String, Long)]
     // previous round's vocab table, released only AFTER the next
     // round's top-pair collect has materialized the current one — the
@@ -649,21 +649,20 @@ object TextAnalysis {
           .limit(1).collect()
         // this collect materialized `words`' persist — the round
         // before it is now safe to drop
-        if (prev != null) { prev.unpersist(false); prev = null }
+        if (prev != null) { Caches.release(prev); prev = null }
         if (top.isEmpty) return out.toSeq
         val (a, b, c) = (top(0).getString(0), top(0).getString(1),
           top(0).getLong(2))
         out += ((a, b, c))
-        val next = words.select(col("freq"),
-          mergeFold(col("syms"), a, b).as("syms"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        val next = Caches.persist(words.select(col("freq"),
+          mergeFold(col("syms"), a, b).as("syms")))
         prev = words
         words = next
       }
       out.toSeq
     } finally {
-      if (prev != null) prev.unpersist(false)
-      words.unpersist(false); ()
+      if (prev != null) Caches.release(prev)
+      Caches.release(words)
     }
   }
 

@@ -6,27 +6,18 @@ import scala.jdk.CollectionConverters._
 /** Source guard: the session is built in one place
   * ([[graft.SparkEntry.session]]), the declared queries are looped over
   * in one place ([[graft.Harness]]) by the four harness mains alone,
+  * session-held state is memoized in one place ([[Caches.perSession]]),
   * and every persist or local checkpoint goes through [[Caches]], so
   * one release call per query frees it. The few raw sites whose
-  * lifetime is not one query are named here, each with its reason and
-  * its exact count. */
+  * lifetime is neither one query nor one session are named here, each
+  * with its reason and its exact count. */
 class CachesGuardSpec extends AnyFunSuite {
 
   private val allowed: Map[String, (Int, String)] = Map(
     "graft/model/GraftStore.scala" ->
       (1, "the quads view lives as long as its store"),
-    "graft/PipelineQueries.scala" ->
-      (2, "per-sf-dir pair and cluster corpora, shared by three queries"),
     "graft/streaming/Streaming.scala" ->
-      (1, "the ingest snapshot chain lives as long as its stream"),
-    "graft/ingest/Ingest.scala" ->
-      (1, "parsed statements, released by the operator in a finally"),
-    "graft/pipeline/TextAnalysis.scala" ->
-      (2, "BPE vocabulary rounds, released by the operator in a finally"),
-    "graft/pipeline/Similarity.scala" ->
-      (1, "PQ codebook sample, released by the operator in a finally"),
-    "graft/pipeline/Dedup.scala" ->
-      (1, "connected-components edges, released by the operator in a finally"))
+      (1, "the ingest snapshot chain lives as long as its stream"))
 
   /** (relative path, code lines) of every source under `dir`, comments
     * dropped. */
@@ -73,6 +64,17 @@ class CachesGuardSpec extends AnyFunSuite {
 
   test("no mains in src/test") {
     assert(count(main, sourcesIn("src/test/scala")).isEmpty)
+  }
+
+  test("session-held state is memoized only by Caches.perSession") {
+    // a map's type may wrap onto the next line: match per file
+    val keyed = """Map\[\s*\(?\s*SparkSession\b""".r
+    val maps = sources.map { case (f, ls) =>
+      f -> keyed.findAllIn(ls.mkString(" ")).size
+    }.filter(_._2 > 0).toMap
+    assert(maps == Map("graft/ops/Caches.scala" -> 1),
+      s"maps keyed by SparkSession (file -> count): $maps — memoize " +
+        "through Caches.perSession")
   }
 
   test("persists and local checkpoints go through Caches") {

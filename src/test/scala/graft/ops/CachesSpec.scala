@@ -99,6 +99,55 @@ class CachesSpec extends AnyFunSuite {
     assert(!kept.storageLevel.useMemory)
   }
 
+  test("perSession: one build per session and key, in the registered scope") {
+    import s.implicits._
+    var builds = 0
+    // called inside sessionLifetime: the build must still register
+    def held = Caches.sessionLifetime(Caches.perSession(s, "caches_spec") {
+      builds += 1
+      Caches.persist((1 to 10).toDF("x"))
+    })
+    val f = held
+    assert(f.count() == 10)
+    assert((held eq f) && builds == 1)
+    Caches.releaseCaches()
+    assert(!f.storageLevel.useMemory,
+      "a memo build's own persists go with the building query's release")
+  }
+
+  test("perSession: a cluster build leaves no shingle index after release") {
+    val dir = java.nio.file.Files.createTempDirectory("caches_spec_docs")
+    try {
+      // a corpus path no other test reads: its index plan is this test's
+      java.nio.file.Files.copy(
+        java.nio.file.Paths.get(s"$Sf/documents.parquet"),
+        dir.resolve("documents.parquet"))
+      val ns = s.newSession()
+      Caches.releaseCaches()
+      graft.PipelineQueries.all("q_dedup_canonical")(ns, dir.toString)
+        .collect()
+      Caches.releaseCaches()
+      val index = graft.pipeline.Dedup.shingleIndex(
+          ns.read.parquet(s"$dir/documents.parquet"), 2)
+        .select(col("doc_id"), xxhash64(col("sh")).as("sh"))
+      assert(index.storageLevel ==
+        org.apache.spark.storage.StorageLevel.NONE)
+    } finally graft.model.GraftStore.rmTree(dir.toFile)
+  }
+
+  test("indexArtifact: in-memory corpora of one schema get their own fit") {
+    import s.implicits._
+    // same schema, same row count, different vectors: equal canonical
+    // plans, since a local relation's plan string omits its rows
+    def corpus(shift: Float) = (0L until 40L).map { i =>
+      (i, Array.tabulate(8)(j => ((i * 7 + j * 3) % 11).toFloat + shift))
+    }.toDF("vec_id", "embedding")
+    val a = graft.pipeline.Similarity.kmeansCentroids(corpus(0f), 4, 3)
+    val b = graft.pipeline.Similarity.kmeansCentroids(corpus(5f), 4, 3)
+    assert(a != b)
+    Caches.releaseCaches()
+  }
+
   private def countJobs(body: => Unit): Int = {
     val jobs = new java.util.concurrent.atomic.AtomicInteger
     val l = new org.apache.spark.scheduler.SparkListener {
