@@ -1,7 +1,9 @@
 package graft
 
 import graft.ops.Caches
-import graft.pipeline.{Curation, Dedup, Multimodal, Sessions, Similarity, TextAnalysis}
+import graft.pipeline.{Candidates, Curation, Dedup, Multimodal, Sessions,
+  Similarity, TextAnalysis}
+import graft.pipeline.Candidates.{l, r}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -71,6 +73,12 @@ object PipelineQueries {
       e.where(pmod(xxhash64(col("vec_id")), lit(stride)) === 0)
     }
   }
+
+  /** The (v1, v2) pairs with both ids in `sample`'s `vec_id`. */
+  private def bothIn(pairs: DataFrame, sample: DataFrame): DataFrame =
+    pairs
+      .join(sample.select(col("vec_id").as("v1")), Seq("v1"), "left_semi")
+      .join(sample.select(col("vec_id").as("v2")), Seq("v2"), "left_semi")
 
   /** One deterministic TRUE near-dup per sample vector, at vec_id +
     * [[PlantBase]]: a ±30% per-dimension scaling (cosine ≈ 1/√1.09 ≈
@@ -350,10 +358,8 @@ object PipelineQueries {
       val d = docs(s, dir)
       val sp = Dedup.simhashPairs(d, maxHamming = 3)
       val dig = d.select(col("doc_id"), md5(col("text")).as("dg"))
-      val a = dig.alias("a"); val b = dig.alias("b")
-      val dup = a.join(b, col("a.dg") === col("b.dg") &&
-          col("a.doc_id") < col("b.doc_id"))
-        .select(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"))
+      val dup = Candidates.pairs(dig, dig, Seq("dg"),
+        l("doc_id") < r("doc_id"))(l("doc_id").as("d1"), r("doc_id").as("d2"))
       val missed = dup.join(sp.where(col("hamming") === 0)
         .select("d1", "d2"), Seq("d1", "d2"), "left_anti")
       dup.agg(count(lit(1)).as("n_exactdup"))
@@ -395,9 +401,7 @@ object PipelineQueries {
       // anti-joins and exact feeds those plus its own count — Catalyst
       // inlines each reference, so the LSH mining and the quadratic
       // anchor otherwise re-ran per consumer
-      val lshG = Caches.persist(lsh
-        .join(g.select(col("vec_id").as("v1")), Seq("v1"), "left_semi")
-        .join(g.select(col("vec_id").as("v2")), Seq("v2"), "left_semi"))
+      val lshG = Caches.persist(bothIn(lsh, g))
       val exact = Caches.persist(
         Dedup.embeddingDupPairs(g, tau = 0.4).select("v1", "v2"))
       val extra = lshG.join(exact, Seq("v1", "v2"), "left_anti")
@@ -451,9 +455,7 @@ object PipelineQueries {
       val found = truthTrue.join(lsh, Seq("v1", "v2"), "left_semi")
       val su = Caches.persist(g.unionByName(p))
       val exact = Dedup.embeddingDupPairs(su, tau = 0.9).select("v1", "v2")
-      val lshG = lsh
-        .join(su.select(col("vec_id").as("v1")), Seq("v1"), "left_semi")
-        .join(su.select(col("vec_id").as("v2")), Seq("v2"), "left_semi")
+      val lshG = bothIn(lsh, su)
       val extra = lshG.join(exact, Seq("v1", "v2"), "left_anti")
       truth.agg(count(lit(1)).as("n_planted"))
         .crossJoin(truthTrue.agg(count(lit(1)).as("n_true")))
@@ -1073,7 +1075,6 @@ object PipelineQueries {
     // Pins the decode -> featurize -> retrieve composition, the
     // embedding-similarity shape over image payloads.
     "q_image_knn" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
       val content = Multimodal.pngContentStore(s, docs(s, dir))
       val dec = Multimodal.decode(s, content)
       val chunkSum = (q: Int) => aggregate(
@@ -1093,10 +1094,8 @@ object PipelineQueries {
         .select(col("query_path"), col("path").as("neighbor_path"),
           aggregate(zip_with(col("f"), col("qf"), (a, b) => abs(a - b)),
             lit(0L), _ + _).as("dist"))
-      val w = Window.partitionBy("query_path")
-        .orderBy(col("dist"), col("neighbor_path"))
-      scored.withColumn("rank", row_number().over(w))
-        .where(col("rank") <= 3)
+      Candidates.firstK(scored, "query_path", 3, "rank",
+          col("dist"), col("neighbor_path"))
         .select(col("query_path"), col("rank").cast("long").as("rank"),
           col("neighbor_path"), col("dist"))
         .orderBy("query_path", "rank")
@@ -1176,10 +1175,8 @@ object PipelineQueries {
       val d = Similarity.centroidDistance(emb(s, dir))
         .select(col("label"), col("vec_id"),
           round(col("centroid_dist"), 6).as("dist"))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("label")
-        .orderBy(col("dist").desc, col("vec_id").asc)
-      d.withColumn("rnk", row_number().over(w)).where(col("rnk") <= 3)
+      Candidates.firstK(d, "label", 3, "rnk", col("dist").desc,
+          col("vec_id").asc)
         .select("label", "rnk", "vec_id", "dist")
         .orderBy("label", "rnk")
     }),

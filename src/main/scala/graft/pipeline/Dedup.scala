@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import graft.ops.Caches
+import graft.pipeline.Candidates.{l, r}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -8,10 +9,14 @@ import org.apache.spark.sql.functions._
 /** Deduplication operators for training-data pipelines: exact,
   * n-gram Jaccard, MinHash+LSH, SimHash, embedding-cosine.
   *
-  * Scale design: the only all-pairs computation (`jaccardPairs`) joins
-  * through the inverted shingle index (pairs share ≥1 shingle), never
-  * a cross join; MinHash/SimHash replace it with band-bucket joins
-  * whose candidate sets are tiny, which is the 100 TB path.
+  * Every near-dup pair operator is candidate-then-verify over
+  * [[Candidates]]: it supplies a key (a prefix shingle, a MinHash band,
+  * a SimHash chunk, an LSH bucket, a k-means cluster), the key-blocked
+  * join makes candidate pairs and an exact measure keeps the qualifying
+  * ones. `jaccardPairs` and `containmentPairs` are exact through prefix
+  * filtering; MinHash/SimHash band-bucket joins keep the candidate sets
+  * tiny, which is the 100 TB path. The one quadratic operator is
+  * `embeddingDupPairs`, the exact baseline for squarable slices.
   */
 object Dedup {
 
@@ -100,11 +105,7 @@ object Dedup {
     // intersections (collision odds ~ d²/2⁶⁵ — immaterial next to the
     // exactness the oracle checks)
     val idx = hashedShingleIndex(docs, n, textCol)
-    val df = idx.groupBy("sh").agg(count(lit(1)).as("df"))
-    val w = Window.partitionBy("doc_id").orderBy("df", "sh")
-    val prefix = idx.join(df, "sh")
-      .withColumn("pos", row_number().over(w))
-      .withColumn("sz", count(lit(1)).over(Window.partitionBy("doc_id")))
+    val prefix = rarityRanked(idx)
       // FpEps inside ceil: when tau*sz is exactly integral, the double
       // product can land one ulp HIGH and ceil would overshoot by 1 —
       // a too-short prefix silently drops exact-boundary pairs. The
@@ -116,23 +117,28 @@ object Dedup {
     // persisted: both sides of the candidate self-join — without it
     // the df-join + two windows run twice
     val prefixC = Caches.persist(prefix)
-    val a = prefixC.alias("a"); val b = prefixC.alias("b")
     // PPJoin position filter: the overlap can't exceed
     // 1 + min(remaining tokens after this position on either side),
     // and j >= tau needs overlap >= ceil(tau/(1+tau) * (sz1+sz2))
-    val candidates = a.join(b,
-        col("a.sh") === col("b.sh") && col("a.doc_id") < col("b.doc_id") &&
-          least(col("a.sz"), col("b.sz")) >=
-            lit(tau) * greatest(col("a.sz"), col("b.sz")) &&
-          lit(1) + least(col("a.sz") - col("a.pos"),
-            col("b.sz") - col("b.pos")) >=
-            ceil(lit(tau / (1 + tau)) * (col("a.sz") + col("b.sz")) -
-              lit(FpEps)))
-      .select(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"))
+    val candidates = Candidates.pairs(prefixC, prefixC, Seq("sh"),
+        l("doc_id") < r("doc_id") &&
+          least(l("sz"), r("sz")) >= lit(tau) * greatest(l("sz"), r("sz")) &&
+          lit(1) + least(l("sz") - l("pos"), r("sz") - r("pos")) >=
+            ceil(lit(tau / (1 + tau)) * (l("sz") + r("sz")) - lit(FpEps)))(
+        l("doc_id").as("d1"), r("doc_id").as("d2"))
       .distinct()
     jaccardForPairs(docs, candidates, n, textCol, Some(idx))
       .where(col("jaccard") >= tau)
   }
+
+  /** The hashed index with each doc's shingles in the global rarity
+    * order both prefix filters cut from: `pos` ranks them by document
+    * frequency `df` (ties by shingle), `sz` is the doc's set size. */
+  private def rarityRanked(idx: DataFrame): DataFrame =
+    idx.join(idx.groupBy("sh").agg(count(lit(1)).as("df")), "sh")
+      .withColumn("pos", row_number().over(
+        Window.partitionBy("doc_id").orderBy("df", "sh")))
+      .withColumn("sz", count(lit(1)).over(Window.partitionBy("doc_id")))
 
   /** Exact Jaccard restricted to a given candidate pair set — the
     * verification step of candidate-based dedup (LSH bands / prefix
@@ -145,15 +151,15 @@ object Dedup {
                       textCol: String = "text",
                       sharedIdx: Option[DataFrame] = None): DataFrame = {
     val idx = sharedIdx.getOrElse(shingleIndex(docs, n, textCol))
-    val docSets = idx.groupBy("doc_id").agg(collect_set(col("sh")).as("hs"))
     val inter = size(array_intersect(col("hs1"), col("hs2")))
-    pairs
-      .join(docSets.select(col("doc_id").as("d1"), col("hs").as("hs1")), "d1")
-      .join(docSets.select(col("doc_id").as("d2"), col("hs").as("hs2")), "d2")
-      .select(col("d1"), col("d2"),
-        (inter.cast("double") /
-          (size(col("hs1")) + size(col("hs2")) - inter)).as("jaccard"))
+    Candidates.verify(pairs, ("d1", "d2"), shingleSets(idx), "doc_id", "hs",
+      ("hs1", "hs2"))((inter.cast("double") /
+        (size(col("hs1")) + size(col("hs2")) - inter)).as("jaccard"))
   }
+
+  /** One row per doc: its shingle set `hs` — the verify payload. */
+  private def shingleSets(idx: DataFrame): DataFrame =
+    idx.groupBy("doc_id").agg(collect_set(col("sh")).as("hs"))
 
   /** ASYMMETRIC CONTAINMENT pairs — quote/subset detection (the
     * RefinedWeb-style refinement Jaccard misses: a short doc fully
@@ -173,14 +179,10 @@ object Dedup {
                        textCol: String = "text"): DataFrame = {
     require(tau > 0 && tau <= 1, s"tau in (0,1]: $tau")
     val idx = hashedShingleIndex(docs, n, textCol)
-    val df0 = idx.groupBy("sh").agg(count(lit(1)).as("df"))
-    val w = Window.partitionBy("doc_id").orderBy("df", "sh")
     // persisted: BOTH sides of the candidate join derive from this
     // frame (same rationale as jaccardPairs' prefix persist — the
     // df-join + two windows would otherwise run twice)
-    val sized = Caches.persist(idx.join(df0, "sh")
-      .withColumn("pos", row_number().over(w))
-      .withColumn("sz", count(lit(1)).over(Window.partitionBy("doc_id"))))
+    val sized = Caches.persist(rarityRanked(idx))
     // required overlap m = ceil(tau*|A|). BOTH-prefix pigeonhole (the
     // standard overlap-join lemma over one common total order): an
     // overlap >= m forces a shared shingle inside A's (|A|-m+1)-prefix
@@ -198,24 +200,21 @@ object Dedup {
       .where(col("pos") <= col("sz") - m1 + 1)
       .select(col("doc_id").as("d1"), col("sh"), m1.as("m"),
         col("pos").as("pos1"), col("sz").as("sz1"))
-    val cands = prefix
-      .join(sized.select(col("doc_id").as("d2"), col("sh"),
-        col("pos").as("pos2"), col("sz").as("sz2")), Seq("sh"))
-      .where(col("d1") =!= col("d2") && col("sz2") >= col("m") &&
-        col("pos2") <= col("sz2") - col("m") + 1 &&
-        // PPJoin positional filter: a pair's FIRST shared shingle (in
-        // the common order) bounds the overlap by what remains after
-        // it on both sides; a true-overlap >= m pair always keeps that
-        // first witness, so pruning witness rows failing the bound is
-        // exact while dropping the hot-shingle tail matches
-        least(col("sz1") - col("pos1"), col("sz2") - col("pos2")) + 1 >=
-          col("m"))
-      .select("d1", "d2").distinct()
-    val docSets = idx.groupBy("doc_id").agg(collect_set(col("sh")).as("hs"))
-    cands
-      .join(docSets.select(col("doc_id").as("d1"), col("hs").as("h1")), "d1")
-      .join(docSets.select(col("doc_id").as("d2"), col("hs").as("h2")), "d2")
-      .select(col("d1"), col("d2"),
+    val cands = Candidates.pairs(prefix,
+        sized.select(col("doc_id").as("d2"), col("sh"),
+          col("pos").as("pos2"), col("sz").as("sz2")), Seq("sh"),
+        l("d1") =!= r("d2") && r("sz2") >= l("m") &&
+          r("pos2") <= r("sz2") - l("m") + 1 &&
+          // PPJoin positional filter: a pair's FIRST shared shingle (in
+          // the common order) bounds the overlap by what remains after
+          // it on both sides; a true-overlap >= m pair always keeps that
+          // first witness, so pruning witness rows failing the bound is
+          // exact while dropping the hot-shingle tail matches
+          least(l("sz1") - l("pos1"), r("sz2") - r("pos2")) + 1 >= l("m"))(
+        l("d1"), r("d2"))
+      .distinct()
+    Candidates.verify(cands, ("d1", "d2"), shingleSets(idx), "doc_id", "hs",
+        ("h1", "h2"))(
         (size(array_intersect(col("h1"), col("h2"))).cast("double") /
           size(col("h1"))).as("containment"))
       .where(col("containment") >= tau)
@@ -256,11 +255,10 @@ object Dedup {
       textCol = textCol)
     val bIdx = minhashBandIndex(bench, n, numHashes = 128, bands = 64,
       textCol = textCol)
-    val cands = cIdx.join(
+    val cands = Candidates.pairs(cIdx,
         broadcast(bIdx.select(col("doc_id").as("bench_id"),
-          col("band"), col("bh"))),
-        Seq("band", "bh"))
-      .select(col("doc_id").as("d1"), col("bench_id").as("d2"))
+          col("band"), col("bh"))), Seq("band", "bh"))(
+        l("doc_id").as("d1"), r("bench_id").as("d2"))
       .distinct()
     // both pair sides must resolve in ONE doc frame for the exact
     // verify; benchmark rows union in only for ids ABSENT from the
@@ -323,11 +321,8 @@ object Dedup {
                  bands: Int = 32, tau: Double = 0.8,
                  textCol: String = "text"): DataFrame = {
     val buckets = minhashBandIndex(docs, n, numHashes, bands, textCol)
-    val l = buckets.alias("l"); val r = buckets.alias("r")
-    val candidates = l.join(r,
-        col("l.band") === col("r.band") && col("l.bh") === col("r.bh") &&
-          col("l.doc_id") < col("r.doc_id"))
-      .select(col("l.doc_id").as("d1"), col("r.doc_id").as("d2"))
+    val candidates = Candidates.pairs(buckets, buckets, Seq("band", "bh"),
+        l("doc_id") < r("doc_id"))(l("doc_id").as("d1"), r("doc_id").as("d2"))
       .distinct()
     // verify: exact jaccard computed for the candidate pairs only —
     // this is the whole point of LSH (the all-pairs job never runs);
@@ -355,13 +350,11 @@ object Dedup {
                          textCol: String = "text"): DataFrame = {
     val batchIdx = Caches.persist(
       minhashBandIndex(batch, n, numHashes, bands, textCol))
-    val l = batchIdx.alias("l")
-    val r = corpusIndex.unionByName(batchIdx).alias("r")
-    val candidates = Caches.persist(r.join(broadcast(l),
-        col("l.band") === col("r.band") && col("l.bh") === col("r.bh") &&
-          col("l.doc_id") =!= col("r.doc_id"))
-      .select(least(col("l.doc_id"), col("r.doc_id")).as("d1"),
-        greatest(col("l.doc_id"), col("r.doc_id")).as("d2"))
+    val candidates = Caches.persist(Candidates.pairs(
+        corpusIndex.unionByName(batchIdx), broadcast(batchIdx),
+        Seq("band", "bh"), l("doc_id") =!= r("doc_id"))(
+        least(l("doc_id"), r("doc_id")).as("d1"),
+        greatest(l("doc_id"), r("doc_id")).as("d2"))
       .distinct())
     val ids = candidates.select(col("d1").as("doc_id"))
       .unionByName(candidates.select(col("d2").as("doc_id"))).distinct()
@@ -404,12 +397,10 @@ object Dedup {
     // persisted: the self-join would otherwise run the 64-bit-vote
     // aggregation twice
     val blockedC = Caches.persist(blocked)
-    val l = blockedC.alias("l"); val r = blockedC.alias("r")
-    l.join(r, col("l.chunk") === col("r.chunk") &&
-        col("l.ck") === col("r.ck") && col("l.doc_id") < col("r.doc_id"))
-      .select(col("l.doc_id").as("d1"), col("r.doc_id").as("d2"),
-        bit_count(col("l.simhash").bitwiseXOR(col("r.simhash")))
-          .as("hamming"))
+    Candidates.pairs(blockedC, blockedC, Seq("chunk", "ck"),
+        l("doc_id") < r("doc_id"))(
+        l("doc_id").as("d1"), r("doc_id").as("d2"),
+        bit_count(l("simhash").bitwiseXOR(r("simhash"))).as("hamming"))
       .distinct()
       .where(col("hamming") <= maxHamming)
   }
@@ -442,12 +433,8 @@ object Dedup {
     // and split the STREAMED side by compute — a one-split input
     // otherwise runs the whole n²/2 cosine pass in a single task
     // (sf10 probe: 85 s for a 4M-pair join that parallelizes to ~3 s)
-    val a = Similarity.computeParallel(raw).alias("a")
-    val b = broadcast(raw.alias("b"))
-    a.join(b, col("a.vec_id") < col("b.vec_id"))
-      .select(col("a.vec_id").as("v1"), col("b.vec_id").as("v2"),
-        Similarity.cosineFixed(col("a.embedding"), col("b.embedding"))
-          .as("cosine"))
+    Candidates.pairs(Similarity.computeParallel(raw), broadcast(raw), Nil,
+        l("vec_id") < r("vec_id"))(cosinePair: _*)
       .where(col("cosine") >= tau)
   }
 
@@ -460,8 +447,8 @@ object Dedup {
     * per (table, bucket) — never all-pairs; at 100 TB the bucketed
     * frame is the written index, partitioned by (table, bucket).
     *
-    * `numPlanes = 0` (the default) sizes the plane count from the
-    * corpus ([[Similarity.autoPlanes]]): per-bucket occupancy targets
+    * The plane count is sized from the corpus
+    * ([[Similarity.autoPlanes]]): per-bucket occupancy targets
     * ~512 rows so the bucket self-join stays linear in n, capped by
     * the recall-feasibility bound AT THIS τ. The cap is the honest
     * part: at τ=0.4 (p≈0.66) feasible k for 8 tables is 4, so the
@@ -470,8 +457,7 @@ object Dedup {
     * at 5M vectors; the production near-dup threshold (τ≥0.9, p≈0.86,
     * feasible k≈12) buckets ~250× harder and scales near-linearly.
     * Gated-sf shapes are bit-identical (≤5k vectors → k=4). */
-  def embeddingDupPairsLsh(emb: DataFrame, tau: Double,
-                           numPlanes: Int = 0, dim: Int = 64,
+  def embeddingDupPairsLsh(emb: DataFrame, tau: Double, dim: Int = 64,
                            tables: Int = 8): DataFrame = {
     val base = emb.select(col("vec_id"), col("embedding"))
     // tables = 0 opts into the theory-true joint (k, L) sizing
@@ -480,13 +466,7 @@ object Dedup {
     // caller) keeps L fixed and lets k grow only to that L's recall
     // feasibility bound.
     val (nPlanes, nTables) =
-      if (numPlanes > 0 && tables > 0) (numPlanes, tables)
-      else if (tables == 0 && numPlanes > 0)
-        // caller pinned the bucket granularity: size only L from it
-        // (an explicit k was previously discarded by the autoKL branch)
-        (numPlanes, Similarity.tablesForPinnedK(numPlanes, tau))
-      else if (tables == 0)
-        Similarity.autoKL(base.count(), 512L, tau)
+      if (tables == 0) Similarity.autoKL(base.count(), 512L, tau)
       else (Similarity.autoPlanes(base.count(), 512L, tau, tables,
         multiprobe = false), tables)
     // persisted: the bucket self-join would otherwise hash the corpus
@@ -495,16 +475,16 @@ object Dedup {
       Similarity.lshBuckets(base, nPlanes, dim, nTables)
         .select(col("vec_id"), col("table"), col("bucket"),
           col("embedding")))
-    val a = bucketed.alias("a"); val b = bucketed.alias("b")
-    a.join(b, col("a.table") === col("b.table") &&
-        col("a.bucket") === col("b.bucket") &&
-        col("a.vec_id") < col("b.vec_id"))
-      .select(col("a.vec_id").as("v1"), col("b.vec_id").as("v2"),
-        Similarity.cosineFixed(col("a.embedding"), col("b.embedding"))
-          .as("cosine"))
+    Candidates.pairs(bucketed, bucketed, Seq("table", "bucket"),
+        l("vec_id") < r("vec_id"))(cosinePair: _*)
       .distinct() // a pair can meet in several tables
       .where(col("cosine") >= tau)
   }
+
+  /** (v1, v2, cosine) of a [[Candidates.pairs]] join over embeddings. */
+  private def cosinePair: Seq[Column] =
+    Seq(l("vec_id").as("v1"), r("vec_id").as("v2"),
+      Similarity.cosineFixed(l("embedding"), r("embedding")).as("cosine"))
 
   /** Connected components over a near-dup pair frame — turns pairwise
     * matches into DEDUP CLUSTERS: (member, root) with root = the
@@ -631,6 +611,8 @@ object Dedup {
                         textCol: String = "text"): DataFrame = {
     val grams = shingleIndex(docs, n, textCol)
       .select(col("doc_id"), xxhash64(col("sh")).as("g"))
+    // written out, not through Candidates.pairs: the grouping keys are
+    // the join's own columns, a projection before them would move the plan
     val a = grams.alias("a"); val b = grams.alias("b")
     a.join(b, col("a.g") === col("b.g") &&
         col("a.doc_id") < col("b.doc_id"))
@@ -800,24 +782,26 @@ object Dedup {
     val assigned = Similarity.kmeans(emb, k, iters)
     val m = Caches.persist(emb.select(col("vec_id"), col("embedding"))
       .join(assigned, Seq("vec_id")))
-    val a = m.alias("a"); val b = m.alias("b")
-    a.join(b, col("a.cluster") === col("b.cluster") &&
-        col("a.vec_id") < col("b.vec_id"))
-      .select(col("a.cluster").as("cluster"),
-        col("a.vec_id").as("v1"), col("b.vec_id").as("v2"),
-        round(Similarity.cosineFixed(col("a.embedding"),
-          col("b.embedding")), 6).as("cosine"))
-      .where(col("cosine") >= tau)
+    clusterPairs(m, "embedding", tau)
   }
+
+  /** Exact in-cluster pairs of a (vec_id, `vec`, cluster) frame:
+    * (cluster, v1, v2, cosine) with the cosine rounded to 6 decimals
+    * before the `tau` threshold. */
+  private def clusterPairs(m: DataFrame, vec: String, tau: Double): DataFrame =
+    Candidates.pairs(m, m, Seq("cluster"), l("vec_id") < r("vec_id"))(
+        l("cluster").as("cluster"), l("vec_id").as("v1"), r("vec_id").as("v2"),
+        round(Similarity.cosineFixed(l(vec), r(vec)), 6).as("cosine"))
+      .where(col("cosine") >= tau)
 
   /** SCALE-SAFE SemDeDup: the same (cluster, v1, v2, cosine) contract
     * as [[semanticPairs]], with BOTH quadratic-by-construction costs
     * of the flat form replaced:
     *
-    *   1. ASSIGNMENT. Flat SemDeDup at its k = n/[[targetCell]]
-    *      contract pays n·k distance evals — Θ(n²/50), measured 14.4×
-    *      for one 10× decade at 500k vectors. Here k is CAPPED at
-    *      `maxK` (the fit stays linear, one corpus-scan per Lloyd
+    *   1. ASSIGNMENT. Flat SemDeDup at its k = n/50 contract pays
+    *      n·k distance evals — Θ(n²/50), measured 14.4× for one 10×
+    *      decade at 500k vectors. Here k is CAPPED at 1024 (the fit
+    *      stays linear, one corpus-scan per Lloyd
     *      iteration through the native argmin) and every vector is
     *      assigned TWO-LEVEL: coarse cell = argmin over the ~√k
     *      centroids of the fine centroids' own (driver-side) Lloyd
@@ -843,11 +827,13 @@ object Dedup {
     * quantizer and dedups within cells; the two-level assignment is
     * the standard IVF-style build. Reference repo scale story:
     * SURVEY §7.3 step 9. */
-  def semanticPairs2L(emb: DataFrame, tau: Double, targetCell: Int = 50,
-                      iters: Int = 2, maxK: Int = 1024,
+  def semanticPairs2L(emb: DataFrame, tau: Double,
                       squarableCell: Int = 1000): DataFrame = {
+    // flat SemDeDup's ~50 vectors per cluster, capped at 1024 clusters;
+    // 2 Lloyd rounds at both levels
+    val iters = 2
     val n = emb.count()
-    val k = math.max(10L, math.min(maxK.toLong, n / targetCell)).toInt
+    val k = math.max(10L, math.min(1024L, n / 50)).toInt
     val fine = Similarity.kmeansCentroids(emb, k, iters)
     val coarseK = math.max(1,
       math.min(32, math.ceil(math.sqrt(k.toDouble)).toInt))
@@ -887,46 +873,28 @@ object Dedup {
         graft.functions.VectorExprs.centroidTopNDist(col("v"), neCents,
           probes),
         cellCents, cellIds).as("cluster")))
-    val pairs =
-      if (n.toDouble / k <= squarableCell) {
-        val a = m.alias("a"); val b = m.alias("b")
-        a.join(b, col("a.cluster") === col("b.cluster") &&
-            col("a.vec_id") < col("b.vec_id"))
-          .select(col("a.cluster").as("cluster"),
-            col("a.vec_id").as("v1"), col("b.vec_id").as("v2"),
-            round(Similarity.cosineFixed(col("a.v"), col("b.v")), 6)
-              .as("cosine"))
-          .where(col("cosine") >= tau)
-      } else {
-        // clusters too large to square: candidates must ALSO share an
-        // LSH bucket inside their cluster. Production (τ≥0.9) bands
-        // hard; the candidate volume per cluster is
-        // Θ(size^(1+ρ))/cluster — the same curve as the global prod
-        // miner, partitioned by cluster.
-        val dim = fine.head.length
-        val (kp, lt) = Similarity.autoKL(n, 512L, tau)
-        val bucketed = Caches.persist(Similarity.lshBuckets(
-          m.select(col("vec_id"), col("cluster"),
-            col("v").as("embedding")), kp, dim, lt)
-          .select("vec_id", "cluster", "table", "bucket"))
-        val a = bucketed.alias("a"); val b = bucketed.alias("b")
-        val cand = a.join(b, col("a.cluster") === col("b.cluster") &&
-            col("a.table") === col("b.table") &&
-            col("a.bucket") === col("b.bucket") &&
-            col("a.vec_id") < col("b.vec_id"))
-          .select(col("a.cluster").as("cluster"),
-            col("a.vec_id").as("v1"), col("b.vec_id").as("v2"))
-          .distinct() // a pair can meet in several tables
-        cand
-          .join(m.select(col("vec_id").as("v1"), col("v").as("va")),
-            Seq("v1"))
-          .join(m.select(col("vec_id").as("v2"), col("v").as("vb")),
-            Seq("v2"))
-          .select(col("cluster"), col("v1"), col("v2"),
-            round(Similarity.cosineFixed(col("va"), col("vb")), 6)
-              .as("cosine"))
-          .where(col("cosine") >= tau)
-      }
-    pairs
+    if (n.toDouble / k <= squarableCell) clusterPairs(m, "v", tau)
+    else {
+      // clusters too large to square: candidates must ALSO share an
+      // LSH bucket inside their cluster. Production (τ≥0.9) bands
+      // hard; the candidate volume per cluster is
+      // Θ(size^(1+ρ))/cluster — the same curve as the global prod
+      // miner, partitioned by cluster.
+      val dim = fine.head.length
+      val (kp, lt) = Similarity.autoKL(n, 512L, tau)
+      val bucketed = Caches.persist(Similarity.lshBuckets(
+        m.select(col("vec_id"), col("cluster"),
+          col("v").as("embedding")), kp, dim, lt)
+        .select("vec_id", "cluster", "table", "bucket"))
+      val cand = Candidates.pairs(bucketed, bucketed,
+          Seq("cluster", "table", "bucket"), l("vec_id") < r("vec_id"))(
+          l("cluster").as("cluster"), l("vec_id").as("v1"),
+          r("vec_id").as("v2"))
+        .distinct() // a pair can meet in several tables
+      Candidates.verify(cand, ("v1", "v2"), m, "vec_id", "v", ("va", "vb"))(
+          round(Similarity.cosineFixed(col("va"), col("vb")), 6)
+            .as("cosine"))
+        .where(col("cosine") >= tau)
+    }
   }
 }

@@ -12,12 +12,14 @@ import org.apache.spark.sql.functions._
   * (queries are few), so the big side streams once with no shuffle
   * until the final per-query top-k.
   *
-  * Scale path: random-hyperplane LSH bucketing — each vector lands in
-  * one of 2^planes buckets; probing a query's bucket (plus optional
-  * multi-probe neighbors) turns the scan into a bucket-pruned lookup.
-  * An IVF variant would k-means the space instead; hyperplane LSH is
-  * chosen because it is stateless/deterministic (no trained model to
-  * ship).
+  * Scale paths, four index families: random-hyperplane LSH buckets
+  * ([[lshTopK]] — stateless, multi-probe), IVF cells ([[ivfTopK]] — a
+  * trained k-means quantizer), a JL random-projection sketch
+  * ([[rpTopK]]) and product-quantized codes ([[pqTopK]]), plus the
+  * SQ8-compressed exact scan ([[sq8TopK]]). Each is
+  * candidate-then-verify over [[Candidates]]: the index makes the
+  * candidates, exact cosine ranks them, and one per-query top-k (or,
+  * behind a coarse score, one exact re-rank) finishes every family.
   */
 object Similarity {
 
@@ -44,13 +46,6 @@ object Similarity {
     else if (df.rdd.getNumPartitions < par) df.repartition(par) else df
   }
 
-  /** dot product of two double arrays — index-ordered accumulation
-    * (deterministic; used for oracle-parity too). Higher-order
-    * functions (aggregate/zip_with) evaluate INTERPRETED per element —
-    * fine for a handful of rows, ruinous on a pair join. */
-  def dot(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, x) => acc + x)
-
   /** dot product at pair-join scale — delegates to the native
     * [[graft.functions.DotProduct]] codegen expression (a tight
     * generated loop; HOF folds evaluate interpreted and dim-unrolled
@@ -67,8 +62,6 @@ object Similarity {
     * interpreted HOF — measured 10-30× slowdowns on pair joins). */
   def cosineFixed(a: Column, b: Column): Column =
     graft.functions.VectorExprs.cosine(a, b)
-
-  def norm(a: Column): Column = sqrt(dot(a, a))
 
   /** l2-normalize (as double), so cosine == dot. The norm runs through
     * the native dot expression — an `aggregate` HOF inside the per-
@@ -134,9 +127,7 @@ object Similarity {
   def cosineTopK(emb: DataFrame, queryIds: Seq[Long],
                  k: Int, roundDp: Int = -1): DataFrame = {
     val base = emb.select(col("vec_id"), col("embedding"))
-    val queries = broadcast(
-      base.where(col("vec_id").isin(queryIds: _*))
-        .select(col("vec_id").as("query_id"), col("embedding").as("qe")))
+    val queries = Candidates.queries(base, queryIds, col("embedding").as("qe"))
     // roundDp >= 0 rounds the cosine BEFORE ranking so a last-ulp libm
     // divergence vs an oracle that recomputes the same cosine can't
     // flip near-tied ranks — real value gaps are >= 1e-8, libm noise
@@ -146,11 +137,7 @@ object Similarity {
     val scored = base.join(queries, col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         cosExpr.as("cosine"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cosine").desc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select("query_id", "rank", "neighbor_id", "cosine")
+    Candidates.topK(scored, k)
   }
 
   /** Per-plane agreement probability for a pair at cosine `c`:
@@ -230,26 +217,6 @@ object Similarity {
     (k, math.max(1, tablesFor(k)))
   }
 
-  /** L for a CALLER-pinned k: the table count the recall target
-    * demands at exactly `k` planes (same inverse formula as
-    * [[autoKL]], no k search). Lets a caller fix bucket granularity
-    * and still get the theory-true table count, instead of having an
-    * explicit k silently recomputed. Fails loud when the pinned k
-    * cannot reach the recall target within the table cap — a quietly
-    * under-recalled index is the defect class autoKL exists to
-    * prevent. */
-  private[pipeline] def tablesForPinnedK(k: Int, minCos: Double,
-                                         target: Double = 0.7,
-                                         maxTables: Int = 64): Int = {
-    val hit = math.pow(planeAgree(minCos), k)
-    val l = if (hit >= target) 1
-      else math.ceil(math.log(1 - target) / math.log(1 - hit)).toInt
-    require(l <= maxTables,
-      s"pinned k=$k at minCos=$minCos needs L=$l tables for recall " +
-        s"$target, above the cap $maxTables — lower k or the threshold")
-    math.max(1, l)
-  }
-
   /** Deterministic random hyperplanes (seeded per table — no trained
     * state to ship). */
   private def planes(table: Int, numPlanes: Int, dim: Int): Seq[Seq[Double]] = {
@@ -300,23 +267,20 @@ object Similarity {
     * extra tables at zero index-space cost (the big lever when the
     * index is written storage: L tables = L copies of the corpus).
     *
-    * `numPlanes = 0` (the default) sizes the plane count from the
-    * corpus via [[autoPlanes]]: per-bucket occupancy targets ~2048
-    * rows so candidate work stays linear in n, capped by the recall-
-    * feasibility bound at `minCos` contrast (0.35 = the synthetic
-    * corpus's exact-top-5 cosine — the adversarial low-contrast case).
-    * `probes = 0` then probes the full Hamming-1 ball (k+1 buckets per
-    * table, the recall the feasibility model credits). At the gated
+    * The plane count is sized from the corpus via [[autoPlanes]]:
+    * per-bucket occupancy targets ~2048 rows so candidate work stays
+    * linear in n, capped by the recall-feasibility bound at 0.35
+    * contrast (the synthetic corpus's exact-top-5 cosine — the
+    * adversarial low-contrast case). `probes = 0` probes the full
+    * Hamming-1 ball (k+1 buckets per table, the recall the
+    * feasibility model credits). At the gated
     * sfs (≤5k vectors) auto resolves to the historical (4 planes,
     * 5 probes) exactly. */
-  def lshTopK(emb: DataFrame, queryIds: Seq[Long], k: Int,
-              numPlanes: Int = 0, dim: Int = 64,
-              tables: Int = 6, probes: Int = 0,
-              minCos: Double = 0.35): DataFrame = {
+  def lshTopK(emb: DataFrame, queryIds: Seq[Long], k: Int, dim: Int = 64,
+              tables: Int = 6, probes: Int = 0): DataFrame = {
     val base = emb.select(col("vec_id"), col("embedding"))
     val nPlanes =
-      if (numPlanes > 0) numPlanes
-      else autoPlanes(base.count(), 2048L, minCos, tables, multiprobe = true)
+      autoPlanes(base.count(), 2048L, 0.35, tables, multiprobe = true)
     val nProbes = if (probes > 0) probes else nPlanes + 1
     val bucketed = lshBuckets(base, nPlanes, dim, tables)
       .select(col("vec_id"), col("table"), col("bucket"), col("embedding"))
@@ -335,18 +299,13 @@ object Similarity {
         queries0.select(col("query_id"), col("qt"),
           explode(array(alts: _*)).as("qb"), col("qe"))
       }
-    val queries = broadcast(probed)
-    val scored = bucketed.join(queries,
+    val scored = bucketed.join(broadcast(probed),
         col("table") === col("qt") && col("bucket") === col("qb") &&
           col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         cosineFixed(col("embedding"), col("qe")).as("cosine"))
       .distinct() // a pair can meet in several tables
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cosine").desc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select("query_id", "rank", "neighbor_id", "cosine")
+    Candidates.topK(scored, k)
   }
 
   /** SQ8 scalar quantization: per-dimension affine int8 codes — the
@@ -553,17 +512,17 @@ object Similarity {
 
   /** IVF (inverted-file) ANN — the trained-quantizer alternative to
     * hyperplane LSH: a k-means coarse quantizer over the normalized
-    * corpus assigns every vector to one of `nlist` cells; a query
-    * probes its `nprobe` most-similar cells and ranks exactly inside
+    * corpus assigns every vector to one of nlist cells; a query
+    * probes its nprobe most-similar cells and ranks exactly inside
     * them, scanning ~nprobe/nlist of the corpus. At 100 TB the corpus
     * is written partitioned by cell, so a probe reads nprobe
     * partitions; the quantizer (nlist × dim doubles) is driver-tiny
     * and ships as literals. Euclidean k-means on unit vectors orders
     * like cosine, so the cells are angular regions.
     *
-    * `assign` > 1 is SPILL ASSIGNMENT: each vector is indexed in its
-    * `assign` nearest cells (index grows `assign`×), so a neighbor
-    * sitting just across a cell boundary stays findable — the
+    * Vectors are SPILL-ASSIGNED: each is indexed in its 2 nearest
+    * cells (the index doubles), so a neighbor sitting just across a
+    * cell boundary stays findable — the
     * corpus-side analog of query multi-probe. On the near-uniform
     * synthetic fixtures (neighbors at cosine ≈ 0.35 — the adversarial
     * case for cell methods) measured recall@5 at nprobe/nlist = 1/2 is
@@ -571,30 +530,27 @@ object Similarity {
     * multi-probe union (recall 0.96 there) stays the default scale
     * path; prefer IVF when the embedding space has real cluster
     * structure. */
-  def ivfTopK(emb: DataFrame, queryIds: Seq[Long], k: Int,
-              nlist: Int = 0, nprobe: Int = 0,
-              assign: Int = 2, seed: Long = 42L): DataFrame = {
+  def ivfTopK(emb: DataFrame, queryIds: Seq[Long], k: Int): DataFrame = {
     import org.apache.spark.ml.clustering.KMeans
     import org.apache.spark.ml.functions.array_to_vector
+    val seed = 42L
     val base = emb.select(col("vec_id"), col("embedding"))
-    // `nlist = 0` (the default) sizes the cell count from the corpus:
-    // a FIXED nlist=16 with nprobe=8 scans 50% of the corpus per
-    // query — a constant-factor "index", the same non-scaling shape
+    // the cell count nlist is sized from the corpus: a FIXED nlist=16
+    // with nprobe=8 scans 50% of the corpus per query — a
+    // constant-factor "index", the same non-scaling shape
     // the LSH fixed-k defect had. The faiss recipe is nlist ≈ √n;
     // auto uses the next power of two, capped at 1024 (the bounded
     // 64k-sample fit keeps ≥64 points per cell there), with nprobe =
     // nlist/16 — a 6% scan fraction at the cap. Corpora ≤64k rows
     // keep the historical (16, 8) exactly, so every gated sf (and the
     // f10 decade base) is bit-identical.
-    val nL =
-      if (nlist > 0) nlist
-      else {
-        val n = base.count()
-        if (n <= 65536) 16
-        else math.min(1024, Integer.highestOneBit(
-          math.ceil(math.sqrt(n.toDouble)).toInt - 1) * 2)
-      }
-    val nP = if (nprobe > 0) nprobe else math.max(8, nL / 16)
+    val nL = {
+      val n = base.count()
+      if (n <= 65536) 16
+      else math.min(1024, Integer.highestOneBit(
+        math.ceil(math.sqrt(n.toDouble)).toInt - 1) * 2)
+    }
+    val nP = math.max(8, nL / 16)
     val cents = indexArtifact("ivf", base, Seq(nL, seed),
                               writeMat, readMat) {
       // the quantizer trains on a BOUNDED SAMPLE of normalized vectors
@@ -620,27 +576,19 @@ object Similarity {
     // explode×nlist of the embedding column, no row_number window.
     def topCellsArr(vec: Column, n: Int): Column =
       graft.functions.VectorExprs.centroidTopN(vec, cents, n)
-    // SPILL ASSIGNMENT: each vector is indexed in its `assign` nearest
-    // cells, the corpus-side analog of query multi-probe — a neighbor
-    // just across a cell boundary stays findable. Index grows by
-    // `assign`×; recall on boundary-heavy (weakly clustered) corpora
-    // grows much faster. At 100 TB this frame IS the written cell-
-    // partitioned index, built once at indexing time.
+    // spill assignment to the 2 nearest cells; at 100 TB this frame IS
+    // the written cell-partitioned index, built once at indexing time
     val assigned = base.select(col("vec_id"), col("embedding"),
-      explode(topCellsArr(col("embedding"), assign)).as("cell"))
-    val topCells = base.where(col("vec_id").isin(queryIds: _*))
-      .select(col("vec_id").as("query_id"), col("embedding").as("qe"),
-        explode(topCellsArr(col("embedding"), nP)).as("cell"))
-    val scored = assigned.join(broadcast(topCells), Seq("cell"))
+      explode(topCellsArr(col("embedding"), 2)).as("cell"))
+    val topCells = Candidates.queries(base, queryIds,
+      col("embedding").as("qe"),
+      explode(topCellsArr(col("embedding"), nP)).as("cell"))
+    val scored = assigned.join(topCells, Seq("cell"))
       .where(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         cosineFixed(col("embedding"), col("qe")).as("cosine"))
       .distinct() // a spilled vector can meet a query in several cells
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cosine").desc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select("query_id", "rank", "neighbor_id", "cosine")
+    Candidates.topK(scored, k)
   }
 
   /** Deterministic distributed Lloyd k-means over `array<float>`
@@ -748,8 +696,6 @@ object Similarity {
     // it across cores even when the corpus is one parquet split.
     // Persisted because the loop scans the corpus iters+1 times.
     val e = Caches.persist(computeParallel(e0))
-    def round6(x: Double): Double =
-      BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
     var cents: IndexedSeq[IndexedSeq[Double]] =
       e.orderBy("vec_id").limit(k).collect()
         .map(_.getSeq[Double](1).map(round6).toIndexedSeq).toIndexedSeq
@@ -767,6 +713,11 @@ object Similarity {
     }
     (e, cents)
   }
+
+  /** A centroid coordinate on the 6-decimal grid both k-means levels
+    * and the oracle share. */
+  private def round6(x: Double): Double =
+    BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
 
   /** Final Lloyd centroids only — [[kmeans]]' loop without the
     * assignment materialization. The fine-level quantizer of the
@@ -797,8 +748,6 @@ object Similarity {
       : (IndexedSeq[IndexedSeq[Double]], IndexedSeq[Int]) = {
     require(points.size >= k,
       s"lloydDriver: k=$k over ${points.size} points")
-    def round6(x: Double): Double =
-      BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
     def assign(cs: IndexedSeq[IndexedSeq[Double]]): IndexedSeq[Int] =
       points.map { p =>
         var best = Double.PositiveInfinity; var bestC = -1; var ci = 0
@@ -837,54 +786,37 @@ object Similarity {
   }
 
   /** RANDOM-PROJECTION ANN (Johnson–Lindenstrauss candidate
-    * generation): project corpus and queries to `rdim` dims through a
-    * seeded Gaussian matrix, take each query's `cand` nearest in the
-    * REDUCED space (rdim/dim of the scan bandwidth — the reduced
+    * generation): project corpus and queries to 32 dims through a
+    * seeded Gaussian matrix, take each query's 200 nearest in the
+    * REDUCED space (32/dim of the scan bandwidth — the reduced
     * index is the small written artifact), then re-rank the
     * candidates by exact full-dimension cosine and keep top-k. JL
     * preserves angles to within the projection distortion, so the
     * exact top-k survives into a modest candidate pool with high
     * probability — the third index family next to hyperplane LSH
     * (bucketed) and IVF (trained cells): dense-but-narrower, no
-    * buckets to mis-route, recall tuned by `cand` alone.
+    * buckets to mis-route, recall tuned by the candidate count alone.
     *
     * 100 TB shape: the projection is a per-row expression over the
-    * scan (rdim native-dot nodes); the candidate stage scans only the
-    * rdim-wide index; the re-rank joins the cand×queries id set
+    * scan (one native MatVec node); the candidate stage scans only the
+    * 32-wide index; the re-rank joins the cand×queries id set
     * (broadcast) back to the full vectors — the corpus full-width
     * table is touched only for candidate rows. */
   def rpTopK(emb: DataFrame, queryIds: Seq[Long], k: Int,
-             rdim: Int = 32, dim: Int = 64, cand: Int = 200,
-             seed: Long = 20260814L): DataFrame = {
-    // ONE MatVec node, not rdim per-row DotProduct columns: 32 inlined
+             dim: Int = 64): DataFrame = {
+    // ONE MatVec node, not 32 per-row DotProduct columns: 32 inlined
     // dot loops blow the whole-stage method past the JIT compile limit
     // (the LshSignatures disease — measured 100× off linear)
-    val mat = rpMatrix(rdim, dim, seed)
+    val mat = rpMatrix(32, dim, 20260814L)
     def reduced(v: Column): Column =
       graft.functions.VectorExprs.matVec(v, mat.map(_.toArray).toArray)
     val base = emb.select(col("vec_id"), col("embedding"))
     val idx = base.select(col("vec_id"), reduced(col("embedding")).as("rv"))
-    val queries = broadcast(idx.where(col("vec_id").isin(queryIds: _*))
-      .select(col("vec_id").as("query_id"), col("rv").as("qrv")))
-    val wCand = Window.partitionBy("query_id")
-      .orderBy(col("rcos").desc, col("neighbor_id").asc)
-    val candidates = idx.join(queries, col("vec_id") =!= col("query_id"))
+    val queries = Candidates.queries(idx, queryIds, col("rv").as("qrv"))
+    val coarse = idx.join(queries, col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         cosineFixed(col("rv"), col("qrv")).as("rcos"))
-      .withColumn("crank", row_number().over(wCand))
-      .where(col("crank") <= cand)
-      .select("query_id", "neighbor_id")
-    val qFull = broadcast(base.where(col("vec_id").isin(queryIds: _*))
-      .select(col("vec_id").as("query_id"), col("embedding").as("qe")))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cosine").desc, col("neighbor_id").asc)
-    base.join(broadcast(candidates), col("vec_id") === col("neighbor_id"))
-      .join(qFull, Seq("query_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        cosineFixed(col("embedding"), col("qe")).as("cosine"))
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select("query_id", "rank", "neighbor_id", "cosine")
+    Candidates.rerank(base, queryIds, coarse, "rcos", 200, k)
   }
 
   /** CONTRASTIVE TRIPLET MINING — the dataset-construction op for
@@ -914,8 +846,8 @@ object Similarity {
 
   /** PRODUCT-QUANTIZED ANN (Jégou et al. 2011 — the faiss `PQ<m>`
     * recipe; the FOURTH index family next to LSH buckets, IVF cells
-    * and the JL sketch): the normalized D-dim vector splits into `m`
-    * subvectors and each subspace trains its own `ksub`-centroid
+    * and the JL sketch): the normalized D-dim vector splits into m = 8
+    * subvectors and each subspace trains its own ksub = 16-centroid
     * codebook (bounded 64k-sample k-means per subspace — an index
     * artifact, corpus-size-independent build like the IVF quantizer).
     * A vector is stored as m sub-codes — at ksub≤256 that is m bytes,
@@ -935,9 +867,9 @@ object Similarity {
     * ADC score is m in-row lookups, no join before the candidate cut;
     * codebooks are m×ksub×dsub doubles on the driver. Encoding is
     * in-row argmin via the negated-struct sort — no explode×ksub. */
-  def pqTopK(emb: DataFrame, queryIds: Seq[Long], k: Int,
-             m: Int = 8, ksub: Int = 16, dim: Int = 64,
-             cand: Int = 100, seed: Long = 42L): DataFrame = {
+  def pqTopK(emb: DataFrame, queryIds: Seq[Long], k: Int, dim: Int = 64,
+             cand: Int = 100): DataFrame = {
+    val (m, ksub, seed) = (8, 16, 42L)
     require(dim % m == 0, s"m=$m must divide dim=$dim")
     val dsub = dim / m
     import org.apache.spark.ml.clustering.KMeans
@@ -985,25 +917,10 @@ object Similarity {
     // element on every (candidate × query) row; same left-fold order
     val approx = graft.functions.VectorExprs.pqAdc(
       col("codes"), col("lut"))
-    val wCand = Window.partitionBy("query_id")
-      .orderBy(col("adc").desc, col("neighbor_id").asc)
-    val candidates = coded.join(queries, col("vec_id") =!= col("query_id"))
+    val coarse = coded.join(queries, col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         approx.as("adc"))
-      .withColumn("crank", row_number().over(wCand))
-      .where(col("crank") <= cand)
-      .select("query_id", "neighbor_id")
-    val qFull = broadcast(base.where(col("vec_id").isin(queryIds: _*))
-      .select(col("vec_id").as("query_id"), col("embedding").as("qe")))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cosine").desc, col("neighbor_id").asc)
-    base.join(broadcast(candidates), col("vec_id") === col("neighbor_id"))
-      .join(qFull, Seq("query_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        cosineFixed(col("embedding"), col("qe")).as("cosine"))
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select("query_id", "rank", "neighbor_id", "cosine")
+    Candidates.rerank(base, queryIds, coarse, "adc", cand, k)
   }
 
   /** Top-`c` PRINCIPAL COMPONENTS of the embedding corpus — the

@@ -207,9 +207,8 @@ class EngineSpec extends AnyFunSuite {
       "and a range predicate prunes; path-major row groups are wide") {
     import scala.jdk.CollectionConverters._
     val store = GraftStore.forDir(spark, Sf)
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_consume_layout").toString
-    try {
+    TempDir("graft_consume_layout") { d =>
+      val dir = d.toString
       // explicit partition count: at sf0.001 the default range split
       // gives /user one bucket — several files per parent are what the
       // row-group-stats contrast needs (and what any real corpus has)
@@ -272,11 +271,6 @@ class EngineSpec extends AnyFunSuite {
         .where(col("system.indexTime") > w0 &&
           col("system.indexTime") <= w1).count()
       assert(a == b && b > 0)
-    } finally {
-      val it = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
-        .sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .iterator()
-      while (it.hasNext) java.nio.file.Files.deleteIfExists(it.next())
     }
   }
 
@@ -1747,9 +1741,8 @@ class EngineSpec extends AnyFunSuite {
     // the 100 TB claim in Multimodal's doc: payloads live in a binary
     // column of the content table, and metadata queries must prune it
     // at the SCAN — assert on the parquet ReadSchema, not just rows
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_content_prune").toString
-    try {
+    TempDir("graft_content_prune") { d =>
+      val dir = d.toString
       Multimodal.pngContentStore(spark, docs.limit(50))
         .write.mode("overwrite").parquet(dir)
       val meta = spark.read.parquet(dir)
@@ -1762,11 +1755,6 @@ class EngineSpec extends AnyFunSuite {
       // control: the decode path DOES read it
       val dec = spark.read.parquet(dir).select("path", "data")
       assert(dec.queryExecution.executedPlan.toString.contains("data:binary"))
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(new java.io.File(dir))
     }
   }
 
@@ -2129,33 +2117,35 @@ class EngineSpec extends AnyFunSuite {
 
   test("materialized parquet store answers identically with pruned scans") {
     val store = GraftStore.forDir(spark, Sf)
-    val dir = "/tmp/graft_store_spec"
-    GraftStore.materialize(store, dir)
-    val disk = GraftStore.forParquet(spark, dir)
-    // search parity
-    val q = Search.Request(path = "/customer", qp = Some("acctbal>5000"))
-    assert(paths(Search.run(disk, q)) == paths(Search.run(store, q)))
-    // graph parity through the predicate-partitioned quad view
-    val g = graft.ops.Graph.gqp(disk,
-      Search.run(disk, Search.Request(path = "/customer")),
-      "<refCustomer[totalprice>200000]")
-    val gMem = graft.ops.Graph.gqp(store,
-      Search.run(store, Search.Request(path = "/customer")),
-      "<refCustomer[totalprice>200000]")
-    assert(paths(g) == paths(gMem))
-    // the edge scan is partition-pruned to one predicate
-    val plan = graft.ops.Admin.debugInfo(
-      disk.quads.where(col("predicate") === "refCustomer"))
-    assert(plan.contains("PartitionFilters") &&
-      plan.contains("refCustomer"))
-    // a comma-field-list level (one refEdges over a SET of predicates,
-    // the round-9 grouped-hop shape) prunes to EXACTLY those predicate
-    // partitions — the isin reaches the scan as a partition filter
-    val multi = graft.ops.Admin.debugInfo(
-      disk.refEdges(Seq("refOrders", "refPart")))
-    assert(multi.contains("PartitionFilters") &&
-      multi.contains("refOrders") && multi.contains("refPart") &&
-      !multi.contains("refCustomer"))
+    TempDir("graft_store_spec") { d =>
+      val dir = d.toString
+      GraftStore.materialize(store, dir)
+      val disk = GraftStore.forParquet(spark, dir)
+      // search parity
+      val q = Search.Request(path = "/customer", qp = Some("acctbal>5000"))
+      assert(paths(Search.run(disk, q)) == paths(Search.run(store, q)))
+      // graph parity through the predicate-partitioned quad view
+      val g = graft.ops.Graph.gqp(disk,
+        Search.run(disk, Search.Request(path = "/customer")),
+        "<refCustomer[totalprice>200000]")
+      val gMem = graft.ops.Graph.gqp(store,
+        Search.run(store, Search.Request(path = "/customer")),
+        "<refCustomer[totalprice>200000]")
+      assert(paths(g) == paths(gMem))
+      // the edge scan is partition-pruned to one predicate
+      val plan = graft.ops.Admin.debugInfo(
+        disk.quads.where(col("predicate") === "refCustomer"))
+      assert(plan.contains("PartitionFilters") &&
+        plan.contains("refCustomer"))
+      // a comma-field-list level (one refEdges over a SET of predicates,
+      // the round-9 grouped-hop shape) prunes to EXACTLY those predicate
+      // partitions — the isin reaches the scan as a partition filter
+      val multi = graft.ops.Admin.debugInfo(
+        disk.refEdges(Seq("refOrders", "refPart")))
+      assert(multi.contains("PartitionFilters") &&
+        multi.contains("refOrders") && multi.contains("refPart") &&
+        !multi.contains("refCustomer"))
+    }
   }
 
   test("mergePruned rewrites only the affected __parent partitions") {
@@ -2163,53 +2153,54 @@ class EngineSpec extends AnyFunSuite {
     import graft.ingest.Merger.{Command, FieldValue}
     import spark.implicits._
     val store = GraftStore.forDir(spark, Sf)
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_merge_pruned").toString
-    GraftStore.materialize(store, dir)
-    val infRoot = new java.io.File(s"$dir/infotons")
-    def partState(): Map[String, Set[(String, Long, Long)]] =
-      infRoot.listFiles().filter(_.isDirectory).map { d =>
-        java.net.URLDecoder.decode(
-          d.getName.stripPrefix("__parent="), "UTF-8") ->
-          d.listFiles().filter(_.getName.endsWith(".parquet"))
-            .map(f => (f.getName, f.length(), f.lastModified())).toSet
-      }.toMap
-    val before = partState()
-    val cmds = Seq(Command("update", "/customer/1",
-      T("2024-07-01 00:00:00"),
-      fields = Map("acctbal" ->
-        Seq(FieldValue("999.0", Some(999.0), None, None, "d", None, None))),
-      deleteFields = Map("acctbal" -> Seq.empty))).toDS()
-    val affected = Merger.mergePruned(spark, dir, cmds)
-    assert(affected.toSet == Set("/customer", "/", "$root"))
-    val after = partState()
-    // every UNTOUCHED partition keeps its exact files — proof the
-    // rewrite never opened them for writing
-    val untouched = before.keySet -- affected.toSet
-    assert(untouched.nonEmpty)
-    untouched.foreach(p => assert(after(p) == before(p),
-      s"partition $p was rewritten"))
-    // the read side is partition-pruned: the merge's slice scan reads
-    // only the affected directories
-    import org.apache.spark.sql.execution.FileSourceScanExec
-    val pruned = spark.read.parquet(s"$dir/infotons")
-      .where(col("__parent").isin(affected: _*))
-    val scan = pruned.queryExecution.sparkPlan.collect {
-      case f: FileSourceScanExec => f }.head
-    val nParts = scan.selectedPartitions.partitionCount
-    assert(nParts == affected.length - 1 || nParts == affected.length,
-      s"read $nParts partitions for ${affected.length} affected dirs")
-    assert(nParts < before.size) // $root may not exist yet
-    // merged content is correct on re-open: history appended, flag
-    // flipped, new value in place
-    val disk = GraftStore.forParquet(spark, dir)
-    val versions = disk.infotons
-      .where(col("system.path") === "/customer/1")
-    assert(versions.count() == 2)
-    val cur = versions.where(col("system.current"))
-    assert(cur.count() == 1)
-    assert(cur.select(element_at(col("fields")("acctbal"), 1)
-      .getField("n")).head().getDouble(0) == 999.0)
+    TempDir("graft_merge_pruned") { d =>
+      val dir = d.toString
+      GraftStore.materialize(store, dir)
+      val infRoot = new java.io.File(s"$dir/infotons")
+      def partState(): Map[String, Set[(String, Long, Long)]] =
+        infRoot.listFiles().filter(_.isDirectory).map { d =>
+          java.net.URLDecoder.decode(
+            d.getName.stripPrefix("__parent="), "UTF-8") ->
+            d.listFiles().filter(_.getName.endsWith(".parquet"))
+              .map(f => (f.getName, f.length(), f.lastModified())).toSet
+        }.toMap
+      val before = partState()
+      val cmds = Seq(Command("update", "/customer/1",
+        T("2024-07-01 00:00:00"),
+        fields = Map("acctbal" ->
+          Seq(FieldValue("999.0", Some(999.0), None, None, "d", None, None))),
+        deleteFields = Map("acctbal" -> Seq.empty))).toDS()
+      val affected = Merger.mergePruned(spark, dir, cmds)
+      assert(affected.toSet == Set("/customer", "/", "$root"))
+      val after = partState()
+      // every UNTOUCHED partition keeps its exact files — proof the
+      // rewrite never opened them for writing
+      val untouched = before.keySet -- affected.toSet
+      assert(untouched.nonEmpty)
+      untouched.foreach(p => assert(after(p) == before(p),
+        s"partition $p was rewritten"))
+      // the read side is partition-pruned: the merge's slice scan reads
+      // only the affected directories
+      import org.apache.spark.sql.execution.FileSourceScanExec
+      val pruned = spark.read.parquet(s"$dir/infotons")
+        .where(col("__parent").isin(affected: _*))
+      val scan = pruned.queryExecution.sparkPlan.collect {
+        case f: FileSourceScanExec => f }.head
+      val nParts = scan.selectedPartitions.partitionCount
+      assert(nParts == affected.length - 1 || nParts == affected.length,
+        s"read $nParts partitions for ${affected.length} affected dirs")
+      assert(nParts < before.size) // $root may not exist yet
+      // merged content is correct on re-open: history appended, flag
+      // flipped, new value in place
+      val disk = GraftStore.forParquet(spark, dir)
+      val versions = disk.infotons
+        .where(col("system.path") === "/customer/1")
+      assert(versions.count() == 2)
+      val cur = versions.where(col("system.current"))
+      assert(cur.count() == 1)
+      assert(cur.select(element_at(col("fields")("acctbal"), 1)
+        .getField("n")).head().getDouble(0) == 999.0)
+    }
   }
 
   test("mergeBulk takes the batch mergePruned refuses and swaps in a " +
@@ -2218,56 +2209,59 @@ class EngineSpec extends AnyFunSuite {
     import graft.ingest.Merger.{Command, FieldValue}
     import spark.implicits._
     val store = GraftStore.forDir(spark, Sf)
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_merge_bulk").toString
-    GraftStore.materializeInfotons(store, dir)
-    // 10001 distinct paths: one past the incremental contract
-    // (local val: the lambda must not capture the spec instance)
-    val t0 = T("2024-07-01 00:00:00")
-    val cmds = spark.range(10001).as[Long].map { i =>
-      Command("write", s"/bulk/$i", t0,
-        Map("v" -> Seq(FieldValue(i.toString, Some(i.toDouble),
-          None, None, "l", None, None))), Map.empty)
+    TempDir("graft_merge_bulk") { d =>
+      val dir = d.toString
+      GraftStore.materializeInfotons(store, dir)
+      // 10001 distinct paths: one past the incremental contract
+      // (local val: the lambda must not capture the spec instance)
+      val t0 = T("2024-07-01 00:00:00")
+      val cmds = spark.range(10001).as[Long].map { i =>
+        Command("write", s"/bulk/$i", t0,
+          Map("v" -> Seq(FieldValue(i.toString, Some(i.toDouble),
+            None, None, "l", None, None))), Map.empty)
+      }
+      // the incremental path fails loud...
+      val e = intercept[IllegalArgumentException] {
+        Merger.mergePruned(spark, dir, cmds) }
+      assert(e.getMessage.contains("bulk"))
+      // ...and the bulk fallback applies the same batch
+      Merger.mergeBulk(spark, dir, cmds)
+      val inf = spark.read.parquet(s"$dir/infotons")
+      val bulk = inf.where(col("system.path") === "/bulk/5000")
+      assert(bulk.count() == 1)
+      assert(bulk.select(element_at(col("fields")("v"), 1).getField("n"))
+        .head().getDouble(0) == 5000.0)
+      // parent directory synthesized exactly once
+      assert(inf.where(col("system.path") === "/bulk").count() == 1)
+      // non-commanded rows survive the generational swap byte-for-value
+      val c1 = inf.where(col("system.path") === "/customer/1")
+      assert(c1.count() == 1 && c1.where(col("system.current")).count() == 1)
+      // no generation debris: the swap left only the live layout
+      val leftovers = new java.io.File(dir).listFiles()
+        .map(_.getName).filter(n => n.contains("__gen_") || n.contains("__old_"))
+      assert(leftovers.isEmpty, s"generation debris: ${leftovers.toSeq}")
     }
-    // the incremental path fails loud...
-    val e = intercept[IllegalArgumentException] {
-      Merger.mergePruned(spark, dir, cmds) }
-    assert(e.getMessage.contains("bulk"))
-    // ...and the bulk fallback applies the same batch
-    Merger.mergeBulk(spark, dir, cmds)
-    val inf = spark.read.parquet(s"$dir/infotons")
-    val bulk = inf.where(col("system.path") === "/bulk/5000")
-    assert(bulk.count() == 1)
-    assert(bulk.select(element_at(col("fields")("v"), 1).getField("n"))
-      .head().getDouble(0) == 5000.0)
-    // parent directory synthesized exactly once
-    assert(inf.where(col("system.path") === "/bulk").count() == 1)
-    // non-commanded rows survive the generational swap byte-for-value
-    val c1 = inf.where(col("system.path") === "/customer/1")
-    assert(c1.count() == 1 && c1.where(col("system.current")).count() == 1)
-    // no generation debris: the swap left only the live layout
-    val leftovers = new java.io.File(dir).listFiles()
-      .map(_.getName).filter(n => n.contains("__gen_") || n.contains("__old_"))
-    assert(leftovers.isEmpty, s"generation debris: ${leftovers.toSeq}")
   }
 
   test("opening a store heals a mergeBulk crash window automatically") {
     import java.nio.file.{Files, Paths}
     val store = GraftStore.forDir(spark, Sf)
-    val dir = Files.createTempDirectory("graft_recover_open").toString
-    GraftStore.materialize(store, dir)
-    val expected = spark.read.parquet(s"$dir/infotons").count()
-    // simulate a hard kill between mergeBulk's two renames: the live
-    // layout is gone, the merged generation (complete — materialize's
-    // parquet write stamped its _SUCCESS) is stranded under __gen_
-    Files.move(Paths.get(s"$dir/infotons"),
-      Paths.get(s"$dir/infotons__gen_42"))
-    assert(Files.exists(Paths.get(s"$dir/infotons__gen_42/_SUCCESS")))
-    // no manual operator step: forParquet itself rolls forward
-    val disk = GraftStore.forParquet(spark, dir)
-    assert(Files.exists(Paths.get(s"$dir/infotons")))
-    assert(!Files.exists(Paths.get(s"$dir/infotons__gen_42")))
-    assert(disk.infotons.count() == expected)
+    TempDir("graft_recover_open") { d =>
+      val dir = d.toString
+      GraftStore.materialize(store, dir)
+      val expected = spark.read.parquet(s"$dir/infotons").count()
+      // simulate a hard kill between mergeBulk's two renames: the live
+      // layout is gone, the merged generation (complete — materialize's
+      // parquet write stamped its _SUCCESS) is stranded under __gen_
+      Files.move(Paths.get(s"$dir/infotons"),
+        Paths.get(s"$dir/infotons__gen_42"))
+      assert(Files.exists(Paths.get(s"$dir/infotons__gen_42/_SUCCESS")))
+      // no manual operator step: forParquet itself rolls forward
+      val disk = GraftStore.forParquet(spark, dir)
+      assert(Files.exists(Paths.get(s"$dir/infotons")))
+      assert(!Files.exists(Paths.get(s"$dir/infotons__gen_42")))
+      assert(disk.infotons.count() == expected)
+    }
   }
 
   test("porter-lite stem: driver fold equals the Spark regexp fold") {
@@ -5049,77 +5043,74 @@ class EngineSpec extends AnyFunSuite {
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     val store = GraftStore.forDir(spark, Sf)
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_bucketed").toString
-    spark.sql("DROP TABLE IF EXISTS qb_test")
-    GraftStore.materializeQuadsBucketed(store, dir, "qb_test", 8)
-    def hop(q: DataFrame): DataFrame = {
-      // the BGP STAR shape — ?c :refNation ?n . ?c :mktsegment ?seg —
-      // both triples join on their SUBJECT, the bucketing key (a chain
-      // step ?n :p ?r joins object-to-subject and legitimately keeps
-      // one exchange for the unbucketed side)
-      val a = q.where(col("predicate") === "refNation")
-        .select(col("subject"), col("s").as("n"))
-      val b = q.where(col("predicate") === "mktsegment")
-        .select(col("subject"), col("s").as("seg"))
-      a.join(b, "subject").select(col("n").as("c"), col("seg").as("r"))
-    }
-    def shuffles(df: DataFrame): Int = {
-      df.collect()
-      import org.apache.spark.sql.execution.SparkPlan
-      import org.apache.spark.sql.execution.adaptive.QueryStageExec
-      import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
-      // AQE hides materialized exchanges inside leaf QueryStageExec
-      // wrappers — a plain collect never sees them
-      def walk(p: SparkPlan): Int = {
-        val self = p match { case _: ShuffleExchangeLike => 1; case _ => 0 }
-        val kids: Seq[SparkPlan] = p match {
-          case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
-          case q: QueryStageExec => Seq(q.plan)
-          case r: ReusedExchangeExec => Seq(r.child)
-          case o => o.children
+    TempDir("graft_bucketed") { d =>
+      val dir = d.toString
+      spark.sql("DROP TABLE IF EXISTS qb_test")
+      GraftStore.materializeQuadsBucketed(store, dir, "qb_test", 8)
+      def hop(q: DataFrame): DataFrame = {
+        // the BGP STAR shape — ?c :refNation ?n . ?c :mktsegment ?seg —
+        // both triples join on their SUBJECT, the bucketing key (a chain
+        // step ?n :p ?r joins object-to-subject and legitimately keeps
+        // one exchange for the unbucketed side)
+        val a = q.where(col("predicate") === "refNation")
+          .select(col("subject"), col("s").as("n"))
+        val b = q.where(col("predicate") === "mktsegment")
+          .select(col("subject"), col("s").as("seg"))
+        a.join(b, "subject").select(col("n").as("c"), col("seg").as("r"))
+      }
+      def shuffles(df: DataFrame): Int = {
+        df.collect()
+        import org.apache.spark.sql.execution.SparkPlan
+        import org.apache.spark.sql.execution.adaptive.QueryStageExec
+        import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+        // AQE hides materialized exchanges inside leaf QueryStageExec
+        // wrappers — a plain collect never sees them
+        def walk(p: SparkPlan): Int = {
+          val self = p match { case _: ShuffleExchangeLike => 1; case _ => 0 }
+          val kids: Seq[SparkPlan] = p match {
+            case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+            case q: QueryStageExec => Seq(q.plan)
+            case r: ReusedExchangeExec => Seq(r.child)
+            case o => o.children
+          }
+          self + kids.map(walk).sum
         }
-        self + kids.map(walk).sum
+        walk(df.queryExecution.executedPlan)
       }
-      walk(df.queryExecution.executedPlan)
-    }
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", -1)
-    try {
-      val bucketed = hop(spark.table("qb_test"))
-      val plain = hop(store.quads)
-      assert(shuffles(bucketed) == 0,
-        "bucketed subject join must not shuffle")
-      assert(shuffles(plain) > 0, "control: unbucketed join shuffles")
-      assert(bucketed.collect().map(r => (r.getString(0), r.getString(1)))
-        .sorted.toSeq ==
-        plain.collect().map(r => (r.getString(0), r.getString(1)))
-          .sorted.toSeq)
-      // end-to-end: the SPARQL COMPILER over a bucketed-quads store
-      // also plans the star BGP exchange-free (the bucketing survives
-      // the compiler's scan projections and variable aliasing)
-      val bstore = GraftStore.fromInfotons(spark, store.infotons,
-          Some(store.fieldTypes))
-        .withQuads(spark.table("qb_test"))
-      val q = """PREFIX ont: <cmwell://ont#>
-        |SELECT ?n ?seg WHERE {
-        |  ?c ont:refNation ?n . ?c ont:mktsegment ?seg }""".stripMargin
-      val viaSparql = Sparql.select(bstore, q)
-      assert(shuffles(viaSparql) == 0,
-        "SPARQL star BGP over bucketed quads must not shuffle")
-      val viaPlain = Sparql.select(store, q)
-      assert(viaSparql.collect().map(r => (r.getString(0), r.getString(1)))
-        .sorted.toSeq ==
-        viaPlain.collect().map(r => (r.getString(0), r.getString(1)))
-          .sorted.toSeq)
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-      spark.sql("DROP TABLE IF EXISTS qb_test") // metadata only —
-      // the table is external, so delete the bytes too
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
+      val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", -1)
+      try {
+        val bucketed = hop(spark.table("qb_test"))
+        val plain = hop(store.quads)
+        assert(shuffles(bucketed) == 0,
+          "bucketed subject join must not shuffle")
+        assert(shuffles(plain) > 0, "control: unbucketed join shuffles")
+        assert(bucketed.collect().map(r => (r.getString(0), r.getString(1)))
+          .sorted.toSeq ==
+          plain.collect().map(r => (r.getString(0), r.getString(1)))
+            .sorted.toSeq)
+        // end-to-end: the SPARQL COMPILER over a bucketed-quads store
+        // also plans the star BGP exchange-free (the bucketing survives
+        // the compiler's scan projections and variable aliasing)
+        val bstore = GraftStore.fromInfotons(spark, store.infotons,
+            Some(store.fieldTypes))
+          .withQuads(spark.table("qb_test"))
+        val q = """PREFIX ont: <cmwell://ont#>
+          |SELECT ?n ?seg WHERE {
+          |  ?c ont:refNation ?n . ?c ont:mktsegment ?seg }""".stripMargin
+        val viaSparql = Sparql.select(bstore, q)
+        assert(shuffles(viaSparql) == 0,
+          "SPARQL star BGP over bucketed quads must not shuffle")
+        val viaPlain = Sparql.select(store, q)
+        assert(viaSparql.collect().map(r => (r.getString(0), r.getString(1)))
+          .sorted.toSeq ==
+          viaPlain.collect().map(r => (r.getString(0), r.getString(1)))
+            .sorted.toSeq)
+      } finally {
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+        spark.sql("DROP TABLE IF EXISTS qb_test") // metadata only: the
+        // table is external, TempDir deletes the bytes
       }
-      rm(new java.io.File(dir))
     }
   }
 

@@ -1,5 +1,6 @@
 package graft.ingest
 
+import graft.TempDir
 import graft.model.InfotonModel
 import org.scalatest.funsuite.AnyFunSuite
 import java.sql.Timestamp
@@ -120,8 +121,6 @@ class MergerSpec extends AnyFunSuite {
   // --- mergeBulk crash-window recovery (pure filesystem semantics;
   // the wired-into-store-open path is pinned in EngineSpec) ---
 
-  private def tmpStore(): java.nio.file.Path =
-    java.nio.file.Files.createTempDirectory("graft_recover_spec")
   private def mkGen(root: java.nio.file.Path, name: String,
                     content: String, success: Boolean): Unit = {
     import java.nio.file.Files
@@ -134,45 +133,48 @@ class MergerSpec extends AnyFunSuite {
   test("recoverGenerations rolls FORWARD to the complete generation " +
       "and drops the stale snapshot") {
     import java.nio.file.Files
-    val root = tmpStore()
-    // the exact state a kill between mergeBulk's two renames leaves:
-    // old = pre-merge snapshot, gen = merged batch (complete: its
-    // parquet write stamped _SUCCESS), NO live directory
-    mkGen(root, "infotons__old_100", "stale", success = false)
-    mkGen(root, "infotons__gen_100", "merged", success = true)
-    val action = graft.model.GraftStore.recoverGenerations(root.toString)
-    assert(action == "rolled-forward:infotons__gen_100")
-    assert(Files.readString(
-      root.resolve("infotons/part-0.parquet")) == "merged")
-    assert(!Files.exists(root.resolve("infotons__old_100")))
-    // idempotent: a healthy store is a no-op
-    assert(graft.model.GraftStore.recoverGenerations(root.toString) == "ok")
+    TempDir("graft_recover_spec") { root =>
+      // the exact state a kill between mergeBulk's two renames leaves:
+      // old = pre-merge snapshot, gen = merged batch (complete: its
+      // parquet write stamped _SUCCESS), NO live directory
+      mkGen(root, "infotons__old_100", "stale", success = false)
+      mkGen(root, "infotons__gen_100", "merged", success = true)
+      val action = graft.model.GraftStore.recoverGenerations(root.toString)
+      assert(action == "rolled-forward:infotons__gen_100")
+      assert(Files.readString(
+        root.resolve("infotons/part-0.parquet")) == "merged")
+      assert(!Files.exists(root.resolve("infotons__old_100")))
+      // idempotent: a healthy store is a no-op
+      assert(graft.model.GraftStore.recoverGenerations(root.toString) == "ok")
+    }
   }
 
   test("recoverGenerations rolls BACK to the old snapshot when the " +
       "generation is incomplete") {
     import java.nio.file.Files
-    val root = tmpStore()
-    // kill DURING the generation's parquet write: no _SUCCESS, so the
-    // merged batch is not trustworthy — the pre-merge snapshot wins
-    mkGen(root, "infotons__old_7", "stale", success = false)
-    mkGen(root, "infotons__gen_7", "torn", success = false)
-    val action = graft.model.GraftStore.recoverGenerations(root.toString)
-    assert(action == "rolled-back:infotons__old_7")
-    assert(Files.readString(
-      root.resolve("infotons/part-0.parquet")) == "stale")
+    TempDir("graft_recover_spec") { root =>
+      // kill DURING the generation's parquet write: no _SUCCESS, so the
+      // merged batch is not trustworthy — the pre-merge snapshot wins
+      mkGen(root, "infotons__old_7", "stale", success = false)
+      mkGen(root, "infotons__gen_7", "torn", success = false)
+      val action = graft.model.GraftStore.recoverGenerations(root.toString)
+      assert(action == "rolled-back:infotons__old_7")
+      assert(Files.readString(
+        root.resolve("infotons/part-0.parquet")) == "stale")
+    }
   }
 
   test("recoverGenerations on a dir with nothing to recover: lenient " +
       "open path shrugs, strict operator entry throws") {
-    val root = tmpStore()
-    // the open path must NOT mask a genuinely absent store behind a
-    // recovery error — the natural read failure is the right one
-    assert(graft.model.GraftStore.recoverGenerations(root.toString) == "none")
-    val e = intercept[IllegalStateException] {
-      Merger.recoverGenerations(root.toString)
+    TempDir("graft_recover_spec") { root =>
+      // the open path must NOT mask a genuinely absent store behind a
+      // recovery error — the natural read failure is the right one
+      assert(graft.model.GraftStore.recoverGenerations(root.toString) == "none")
+      val e = intercept[IllegalStateException] {
+        Merger.recoverGenerations(root.toString)
+      }
+      assert(e.getMessage.contains("no recoverable generation"))
     }
-    assert(e.getMessage.contains("no recoverable generation"))
   }
 
   // --- fresh-store fast path (ADVICE r17: assert the plan-time-empty

@@ -1,7 +1,7 @@
 package graft.ops
 
+import graft.SourceScan.{count, mainSources, sourcesIn}
 import org.scalatest.funsuite.AnyFunSuite
-import scala.jdk.CollectionConverters._
 
 /** Source guard: the session is built in one place
   * ([[graft.SparkEntry.session]]), the declared queries are looped over
@@ -18,32 +18,6 @@ class CachesGuardSpec extends AnyFunSuite {
       (1, "the quads view lives as long as its store"),
     "graft/streaming/Streaming.scala" ->
       (1, "the ingest snapshot chain lives as long as its stream"))
-
-  /** (relative path, code lines) of every source under `dir`, comments
-    * dropped. */
-  private def sourcesIn(dir: String): Seq[(String, Seq[String])] = {
-    val root = new java.io.File(dir)
-    assert(root.isDirectory, s"run from the repository root: $root")
-    val base = root.toPath
-    val walk = java.nio.file.Files.walk(base)
-    try walk.iterator().asScala
-      .filter(_.toString.endsWith(".scala")).map { f =>
-        val code = java.nio.file.Files.readAllLines(f).asScala.toSeq
-          .map(_.trim)
-          .filterNot(l => l.startsWith("*") || l.startsWith("/*") ||
-            l.startsWith("//"))
-          .map(l => l.indexOf(" // ") match { case -1 => l; case i => l.take(i) })
-        base.relativize(f).toString -> code
-      }.toSeq
-    finally walk.close()
-  }
-
-  private lazy val sources = sourcesIn("src/main/scala")
-
-  private def count(re: scala.util.matching.Regex,
-                    in: Seq[(String, Seq[String])] = sources): Map[String, Int] =
-    in.map { case (f, ls) => f -> ls.map(re.findAllIn(_).size).sum }
-      .filter(_._2 > 0).toMap
 
   test("one SparkSession builder in src/main") {
     assert(count("""SparkSession\s*\.builder""".r) ==
@@ -69,7 +43,7 @@ class CachesGuardSpec extends AnyFunSuite {
   test("session-held state is memoized only by Caches.perSession") {
     // a map's type may wrap onto the next line: match per file
     val keyed = """Map\[\s*\(?\s*SparkSession\b""".r
-    val maps = sources.map { case (f, ls) =>
+    val maps = mainSources.map { case (f, ls) =>
       f -> keyed.findAllIn(ls.mkString(" ")).size
     }.filter(_._2 > 0).toMap
     assert(maps == Map("graft/ops/Caches.scala" -> 1),

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.TempDir
 import graft.SparkSuite
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -34,9 +35,8 @@ class CachesSpec extends AnyFunSuite {
     import graft.ingest.Merger.{Command, FieldValue}
     import s.implicits._
     val store = graft.model.GraftStore.forDir(s, Sf)
-    val dir = java.nio.file.Files
-      .createTempDirectory("caches_spec_merge").toString
-    try {
+    TempDir("caches_spec_merge") { d =>
+      val dir = d.toString
       graft.model.GraftStore.cloneInfotons(store.materializedDir.get, dir)
       val cmds = Seq(Command("update", "/customer/1",
         java.sql.Timestamp.valueOf("2024-07-01 00:00:00"),
@@ -45,7 +45,7 @@ class CachesSpec extends AnyFunSuite {
         deleteFields = Map("acctbal" -> Seq.empty))).toDS()
       val left = leakedBy(Merger.mergePruned(s, dir, cmds))
       assert(left.isEmpty, s"persisted RDDs left after release: $left")
-    } finally graft.model.GraftStore.rmTree(new java.io.File(dir))
+    }
   }
 
   test("registry: a SPARQL p+ select leaves no checkpoint after one release") {
@@ -116,8 +116,7 @@ class CachesSpec extends AnyFunSuite {
   }
 
   test("perSession: a cluster build leaves no shingle index after release") {
-    val dir = java.nio.file.Files.createTempDirectory("caches_spec_docs")
-    try {
+    TempDir("caches_spec_docs") { dir =>
       // a corpus path no other test reads: its index plan is this test's
       java.nio.file.Files.copy(
         java.nio.file.Paths.get(s"$Sf/documents.parquet"),
@@ -132,7 +131,7 @@ class CachesSpec extends AnyFunSuite {
         .select(col("doc_id"), xxhash64(col("sh")).as("sh"))
       assert(index.storageLevel ==
         org.apache.spark.storage.StorageLevel.NONE)
-    } finally graft.model.GraftStore.rmTree(dir.toFile)
+    }
   }
 
   test("indexArtifact: in-memory corpora of one schema get their own fit") {
@@ -184,21 +183,19 @@ class CachesSpec extends AnyFunSuite {
 
   test("persistForSort: join-of-scans persists, single scan does not") {
     import s.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("caches_spec_").toString
-    (1 to 50).toDF("k").write.mode("overwrite").parquet(s"$dir/a")
-    (1 to 10).toDF("k").write.mode("overwrite").parquet(s"$dir/b")
-    val a = s.read.parquet(s"$dir/a")
-    val b = s.read.parquet(s"$dir/b")
-    try {
-      val joined = Caches.persistForSort(a.join(b, "k"))
-      assert(joined.storageLevel.useMemory,
-        "2-scan join shape should persist before a sort")
-      val single = Caches.persistForSort(a.where(col("k") > 3))
-      assert(!single.storageLevel.useMemory,
-        "single-scan shape must not persist")
-    } finally {
-      Caches.releaseCaches()
-      graft.model.GraftStore.rmTree(new java.io.File(dir))
+    TempDir("caches_spec_") { dir =>
+      (1 to 50).toDF("k").write.mode("overwrite").parquet(s"$dir/a")
+      (1 to 10).toDF("k").write.mode("overwrite").parquet(s"$dir/b")
+      val a = s.read.parquet(s"$dir/a")
+      val b = s.read.parquet(s"$dir/b")
+      try {
+        val joined = Caches.persistForSort(a.join(b, "k"))
+        assert(joined.storageLevel.useMemory,
+          "2-scan join shape should persist before a sort")
+        val single = Caches.persistForSort(a.where(col("k") > 3))
+        assert(!single.storageLevel.useMemory,
+          "single-scan shape must not persist")
+      } finally Caches.releaseCaches()
     }
   }
 

@@ -51,18 +51,4 @@ class LshSizingSpec extends AnyFunSuite {
     assert(l3 <= 64, s"l3=$l3")
     assert(k3 < 14, s"k3=$k3")
   }
-
-  test("tablesForPinnedK honors the caller's k and fails loud past the cap") {
-    // a pinned k must produce the SAME L the autoKL inverse formula
-    // gives at that k (previously an explicit numPlanes with
-    // tables=0 was silently discarded and k recomputed)
-    val (kAuto, lAuto) = Similarity.autoKL(5000000, 512, 0.9)
-    assert(Similarity.tablesForPinnedK(kAuto, 0.9) == lAuto)
-    // a harder pinned k needs MORE tables, never fewer
-    assert(Similarity.tablesForPinnedK(kAuto + 2, 0.9) >= lAuto)
-    // an infeasible pin (loose τ, deep k) must throw, not under-recall
-    intercept[IllegalArgumentException] {
-      Similarity.tablesForPinnedK(20, 0.4, maxTables = 64)
-    }
-  }
 }
